@@ -1,5 +1,7 @@
 package graft.chunk
 
+import java.util.Locale
+
 import graft.url.UrlCanonical
 import graft.html.Doc.{isUniWs, rustTrim}
 
@@ -415,7 +417,7 @@ object Chunker {
     words.foreach { word =>
       if (word.nonEmpty && Character.isUpperCase(word.charAt(0))) indicators += 0.5f
       if (word.exists(Character.isDigit)) indicators += 0.3f
-      val lower = word.toLowerCase
+      val lower = word.toLowerCase(Locale.ROOT)
       if (keywords.exists(lower.contains)) indicators += 0.7f
     }
     val density = math.min(indicators / wordCount, 1.0f)

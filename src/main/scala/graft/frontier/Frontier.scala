@@ -50,38 +50,34 @@ object Frontier {
     * skip the exact anti-join entirely; only possible-members join.
     * `seen` must have url_hash. At small scale (or bloom=None) this
     * degrades to a plain left_anti join. */
-  def notSeen(frontier: DataFrame, seen: DataFrame, bloom: Option[BloomFilter]): DataFrame = {
-    bloom match {
-      case Some(bf) =>
-        val spark = frontier.sparkSession
-        val bcast = spark.sparkContext.broadcast(bf)
-        val mightContain = udf((h: Long) => bcast.value.mightContainLong(h))
-        val definitelyNew = frontier.filter(!mightContain(col("url_hash")))
-        val maybeSeen = frontier.filter(mightContain(col("url_hash")))
-        definitelyNew.unionByName(
-          maybeSeen.join(seen.select("url_hash"), Seq("url_hash"), "left_anti"))
-      case None =>
-        frontier.join(seen.select("url_hash"), Seq("url_hash"), "left_anti")
-    }
-  }
+  def notSeen(frontier: DataFrame, seen: DataFrame, bloom: Option[BloomFilter]): DataFrame =
+    splitNotSeen(frontier, seen, bloom.map { bf =>
+      val b = frontier.sparkSession.sparkContext.broadcast(bf)
+      h => b.value.mightContainLong(h)
+    })
 
   /** [[notSeen]] with the cuckoo sketch as the prefilter — same split
     * (definitely-new bypasses the exact anti-join; maybe-seen pays it),
     * same no-false-negative contract, but the sketch supports the TTL
     * path's per-round DELETES (see [[CuckooFilter]]). */
   def notSeenCuckoo(frontier: DataFrame, seen: DataFrame,
-                    cuckoo: Option[CuckooFilter]): DataFrame = {
-    cuckoo match {
-      case Some(cf) =>
-        val spark = frontier.sparkSession
-        val bcast = spark.sparkContext.broadcast(cf)
-        val mightContain = udf((h: Long) => bcast.value.mightContain(h))
-        val definitelyNew = frontier.filter(!mightContain(col("url_hash")))
-        val maybeSeen = frontier.filter(mightContain(col("url_hash")))
-        definitelyNew.unionByName(
-          maybeSeen.join(seen.select("url_hash"), Seq("url_hash"), "left_anti"))
-      case None =>
-        frontier.join(seen.select("url_hash"), Seq("url_hash"), "left_anti")
+                    cuckoo: Option[CuckooFilter]): DataFrame =
+    splitNotSeen(frontier, seen, cuckoo.map { cf =>
+      val b = frontier.sparkSession.sparkContext.broadcast(cf)
+      h => b.value.mightContain(h)
+    })
+
+  /** The split itself. `mightContain` reads a broadcast sketch, so the
+    * closure ships only the broadcast handle. */
+  private def splitNotSeen(frontier: DataFrame, seen: DataFrame,
+                           mightContain: Option[Long => Boolean]): DataFrame = {
+    val exact = (df: DataFrame) => df.join(seen.select("url_hash"), Seq("url_hash"), "left_anti")
+    mightContain match {
+      case Some(test) =>
+        val maybe = udf(test)
+        frontier.filter(!maybe(col("url_hash")))
+          .unionByName(exact(frontier.filter(maybe(col("url_hash")))))
+      case None => exact(frontier)
     }
   }
 

@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.util.Locale
+
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -26,7 +28,7 @@ object Sketch {
 
   /** Lowercased whitespace tokens of a text. */
   def tokens(text: String): Array[String] =
-    graft.chunk.Chunker.pySplit(text.toLowerCase)
+    graft.chunk.Chunker.pySplit(text.toLowerCase(Locale.ROOT))
 
   /** Word w-shingle strings. */
   def shingleStrings(text: String, w: Int): Array[String] = {

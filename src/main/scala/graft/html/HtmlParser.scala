@@ -1,5 +1,7 @@
 package graft.html
 
+import java.util.Locale
+
 import scala.collection.mutable.ArrayBuffer
 
 /** Minimal HTML parser replicating, on the reference's well-formed HTML
@@ -117,7 +119,7 @@ object HtmlParser {
           val end = html.indexOf('>', i)
           if (end < 0) { i = n }
           else {
-            val tag = html.substring(i + 2, end).trim.toLowerCase
+            val tag = html.substring(i + 2, end).trim.toLowerCase(Locale.ROOT)
             // pop to matching open element, if present
             var idx = stack.length - 1
             while (idx > 0 && stack(idx).tag != tag) idx -= 1
@@ -150,7 +152,7 @@ object HtmlParser {
     var i = start + 1
     val tagStart = i
     while (i < n && (html.charAt(i).isLetterOrDigit || html.charAt(i) == '-' || html.charAt(i) == ':')) i += 1
-    val tag = html.substring(tagStart, i).toLowerCase
+    val tag = html.substring(tagStart, i).toLowerCase(Locale.ROOT)
     // attributes
     var attrs: List[(String, String)] = Nil
     var selfClosing = false
@@ -166,7 +168,7 @@ object HtmlParser {
         case _ =>
           val nameStart = i
           while (i < n && !isSpace(html.charAt(i)) && html.charAt(i) != '=' && html.charAt(i) != '>' && html.charAt(i) != '/') i += 1
-          val name = html.substring(nameStart, i).toLowerCase
+          val name = html.substring(nameStart, i).toLowerCase(Locale.ROOT)
           while (i < n && isSpace(html.charAt(i))) i += 1
           var value = ""
           if (i < n && html.charAt(i) == '=') {

@@ -1,5 +1,7 @@
 package graft.html
 
+import java.util.Locale
+
 import graft.url.UrlCanonical
 
 /** Page-level crawl directives a production crawler must honor but the
@@ -37,7 +39,7 @@ object PageDirectives {
   final case class Directives(noindex: Boolean, nofollow: Boolean, canonical: String)
 
   private def relTokens(e: HtmlParser.Elem): Set[String] =
-    e.attr("rel").map(_.toLowerCase.split("\\s+").filter(_.nonEmpty).toSet)
+    e.attr("rel").map(_.toLowerCase(Locale.ROOT).split("\\s+").filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
 
   def fromRoot(root: HtmlParser.Elem, baseUrl: String): Directives = {
@@ -46,7 +48,7 @@ object PageDirectives {
     HtmlParser.selectTag(root, "meta").foreach { m =>
       if (m.attr("name").exists(_.equalsIgnoreCase("robots"))) {
         m.attr("content").foreach { c =>
-          c.toLowerCase.split(",").map(_.trim).foreach {
+          c.toLowerCase(Locale.ROOT).split(",").map(_.trim).foreach {
             case "noindex"  => noindex = true
             case "nofollow" => nofollow = true
             case "none"     => noindex = true; nofollow = true

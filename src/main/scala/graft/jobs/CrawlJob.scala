@@ -1,12 +1,15 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.annotation.tailrec
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.sketch.BloomFilter
 
 import graft.checkpoint.SnapshotStore
 import graft.chunk.{ChunkRec, Chunker}
-import graft.frontier.{Frontier, ShardedBloom, Scheduler}
+import graft.frontier.{Frontier, Scheduler, SeenSet}
 import graft.html.{Doc, DocRender}
 import graft.model._
 import graft.robots.Robots
@@ -56,10 +59,6 @@ object CrawlJob {
       url: String, url_hash: Long, host: String, depth: Int,
       title: String, markdown: String, outlinks: Seq[String],
       chunks: Seq[ChunkRec], fetch_status: Int, n_chunks: Int)
-
-  final case class RoundMetrics(
-      round: Int, scheduled: Long, fetched: Long, missing: Long,
-      robots_denied: Long, new_frontier: Long, chunks: Long, elapsedSec: Double)
 
   /** Per-process managed-table scratch: tmpfs when the host has it,
     * java.io.tmpdir otherwise (portability beyond Linux). */
@@ -161,6 +160,18 @@ object CrawlJob {
       .agg(min("depth").as("depth"), max("priority").as("priority"))
       .select(frontierCols.map(col): _*)
 
+  /** Under `GRAFT_TIMING`, prints the wall time since the previous mark as
+    * `[timing] <scope> <name>: <s>s`. */
+  private final class PhaseTimer(scope: String) {
+    private val on = sys.env.contains("GRAFT_TIMING")
+    private var last = System.nanoTime()
+    def apply(name: String): Unit = if (on) {
+      val now = System.nanoTime()
+      println(f"[timing] $scope $name: ${(now - last) / 1e9}%.1fs")
+      last = now
+    }
+  }
+
   /** Round-0 frontier: seeds file (S1 semantics: skip blank + `#` lines)
     * ∪ sitemap expansion for seed hosts (S2/S3: robots Sitemap: lines →
     * recursive index-aware parse, domain-substring filter F1).
@@ -205,13 +216,7 @@ object CrawlJob {
         org.apache.spark.sql.expressions.Window.partitionBy("sm_host").orderBy("cand_rank")))
       .filter(col("rn") === 1)
       .select("sm_host", "sm_url")
-    val ifTiming = sys.env.contains("GRAFT_TIMING")
-    var tIf = System.nanoTime()
-    def ifPhase(name: String): Unit = if (ifTiming) {
-      val now = System.nanoTime()
-      println(f"[timing] initial-frontier $name: ${(now - tIf) / 1e9}%.1fs")
-      tIf = now
-    }
+    val phase = new PhaseTimer("initial-frontier")
     // Fixpoint job discipline: each level runs exactly TWO jobs — the
     // eager parse checkpoint (entryParts re-reads it later, so it must
     // materialize) and one count() that lazily materializes BOTH the
@@ -223,7 +228,7 @@ object CrawlJob {
       .groupBy("sm_url").agg(min("sm_host").as("sm_host")) // F5: one parse per sitemap url
       .localCheckpoint(false)
     var nPending = pending.count()
-    ifPhase("pending0")
+    phase("pending0")
     var processed = pending.select("sm_url").limit(0)
     val entryParts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var level = 0
@@ -235,7 +240,7 @@ object CrawlJob {
           (h, r.entries.map(e => (e.loc, e.priority)), r.childSitemaps)
         }.toDF("sm_host", "locs", "children")
         .localCheckpoint() // materialize: one parse pass, lineage cut per level
-      ifPhase(s"level$level-parse")
+      phase(s"level$level-parse")
       entryParts += parsed.select(col("sm_host"), explode(col("locs")).as("e"))
         .select(col("sm_host"), col("e._1").as("loc"), col("e._2").as("pr"))
       processed = processed.unionByName(pending.select("sm_url")).distinct()
@@ -245,7 +250,7 @@ object CrawlJob {
         .groupBy("sm_url").agg(min("sm_host").as("sm_host"))
         .localCheckpoint(false)
       nPending = pending.count()
-      ifPhase(s"level$level-next")
+      phase(s"level$level-next")
       level += 1
     }
 
@@ -281,29 +286,23 @@ object CrawlJob {
         val h = graft.sources.Charset.decodeHtml(html)._2
         val root = graft.html.HtmlParser.parse(h) // parse ONCE for doc + links
         val doc = Doc.fromRoot(root, url)
-        if (cfg.honorPageDirectives) {
-          // robots meta + per-anchor rel (html.PageDirectives): noindex
-          // suppresses corpus content (url still enters the seen set —
-          // it was fetched), nofollow zeroes outlink expansion, anchor
-          // rel=nofollow/sponsored/ugc drops single links. Same parsed
-          // root — no second parse.
-          val dir = graft.html.PageDirectives.fromRoot(root, url)
-          val links =
-            if (dir.nofollow) Seq.empty[String]
-            else graft.html.PageDirectives.followableLinksFromRoot(root, url)
-          val md = if (dir.noindex) "" else DocRender.toMarkdown(doc)
-          val chunks =
-            if (dir.noindex) Seq.empty[ChunkRec]
-            else Chunker.semanticChunks(md, url, warcTs.toInstant.toString,
-              cfg.chunkSize, cfg.chunkOverlap)
-          Extracted(url, hash, host, depth, doc.title, md, links, chunks, 200, chunks.length)
-        } else {
-          val md = DocRender.toMarkdown(doc)
-          val links = Doc.extractLinksFromRoot(root, url)
-          val chunks = Chunker.semanticChunks(md, url, warcTs.toInstant.toString,
+        val (links, noindex) =
+          if (cfg.honorPageDirectives) {
+            // robots meta + per-anchor rel (html.PageDirectives): noindex
+            // suppresses corpus content (url still enters the seen set —
+            // it was fetched), nofollow zeroes outlink expansion, anchor
+            // rel=nofollow/sponsored/ugc drops single links. Same parsed
+            // root — no second parse.
+            val dir = graft.html.PageDirectives.fromRoot(root, url)
+            (if (dir.nofollow) Seq.empty[String]
+             else graft.html.PageDirectives.followableLinksFromRoot(root, url), dir.noindex)
+          } else (Doc.extractLinksFromRoot(root, url), false)
+        val md = if (noindex) "" else DocRender.toMarkdown(doc)
+        val chunks =
+          if (noindex) Seq.empty[ChunkRec]
+          else Chunker.semanticChunks(md, url, warcTs.toInstant.toString,
             cfg.chunkSize, cfg.chunkOverlap)
-          Extracted(url, hash, host, depth, doc.title, md, links, chunks, 200, chunks.length)
-        }
+        Extracted(url, hash, host, depth, doc.title, md, links, chunks, 200, chunks.length)
       }
   }
 
@@ -329,7 +328,7 @@ object CrawlJob {
     import graft.graph.LinkGraph
     val paths = (0 until upToRound).filterNot(store.isExpired)
       .map(v => store.manifest(v).tables("results").path)
-    val ranked = if (paths.isEmpty) {
+    if (paths.isEmpty) {
       emptyFrontier(spark).select(col("url"), lit(0.0).as("link_rank")).limit(0)
     } else {
       val raw = spark.read.parquet(paths: _*)
@@ -358,50 +357,69 @@ object CrawlJob {
             .select(col("url"), round(col("rank"), 6).as("link_rank"))
       }
     }
-    ranked
   }
 
-  /** Run (or resume) the crawl. Returns the final snapshot version. */
-  def run(spark: SparkSession, siteDir: String, workDir: String,
-          cfg: Scheduler.Config = Scheduler.Config(),
-          maxRounds: Int = 50,
-          bloomThreshold: Long = 100000L): Int = {
-    require(cfg.linkPriorityMode.forall(Set("indegree", "pagerank", "hostrank", "urlshape")),
-      s"linkPriorityMode must be indegree|pagerank|hostrank|urlshape, got ${cfg.linkPriorityMode}")
-    require(Set("bloom", "cuckoo")(cfg.seenSketch),
-      s"seenSketch must be bloom|cuckoo, got ${cfg.seenSketch}")
-    require(cfg.linkPriorityEvery > 0,
-      s"linkPriorityEvery must be positive, got ${cfg.linkPriorityEvery}")
-    require(cfg.recrawlMinRounds.isDefined == cfg.recrawlMaxRounds.isDefined,
-      "recrawlMinRounds and recrawlMaxRounds must be set together")
-    val adaptive = cfg.recrawlMinRounds.isDefined
-    if (adaptive) {
-      require(cfg.recrawlMinRounds.get >= 0 &&
-        cfg.recrawlMaxRounds.get >= cfg.recrawlMinRounds.get,
-        s"need 0 <= recrawlMinRounds <= recrawlMaxRounds, got " +
-          s"(${cfg.recrawlMinRounds}, ${cfg.recrawlMaxRounds})")
-      require(cfg.recrawlEvery > 0,
-        s"recrawlEvery must be positive, got ${cfg.recrawlEvery}")
-      require(cfg.seenTtlRounds.isEmpty,
-        "adaptive recrawl replaces the fixed seen TTL — unset seenTtlRounds")
-    }
-    val store = new SnapshotStore(workDir)
+  /** Where the rounds stand in the current epoch's `assigned` table. */
+  private final case class Epoch(path: String, start: Int, total: Long, consumed: Long,
+                                 maxBatch: Int)
+
+  private object Epoch {
+    /** The epoch a committed round left for the next one (resume). */
+    def fromManifest(m: SnapshotStore.Manifest): Epoch =
+      Epoch(m.tables("assigned").path, m.metrics("epoch_start").toInt,
+        m.metrics("assigned_total").toLong, m.metrics("assigned_consumed").toLong,
+        m.metrics("assigned_max_batch").toInt)
+  }
+
+  /** Frontier rows waiting outside the assigned batches. */
+  private final case class Carry(df: DataFrame, rows: Long)
+
+  /** All a round reads from the rounds before it. `epoch` is None only
+    * before round 0's assignment. */
+  private final case class RoundState(round: Int, epoch: Option[Epoch], carry: Carry,
+                                      seen: SeenSet) {
+    /** All batches consumed and nothing carried. */
+    def finished: Boolean = carry.rows == 0 && epoch.exists(e => round - e.start > e.maxBatch)
+  }
+
+  /** Round 0's insert-time robots denials (rows, the gate's cache, count). */
+  private final case class Denied(rows: DataFrame, gate: DataFrame, n: Long)
+
+  private final case class Schedule(fresh: DataFrame, selected: DataFrame, batchRows: Long,
+                                    scheduled: Long, candidates: Long, cacheHits: Long,
+                                    epochFresh: Boolean, lineage: Future[Map[String, Long]])
+
+  private final case class Fetched(resultsPath: String, rows: Long, chunks: Long,
+                                   metrics: Map[String, Double])
+
+  /** The bookkeeping writes' outcome: `next` is the carry table's path or
+    * the pre-assigned next epoch; `seen` completes with the next round's
+    * seen set. */
+  private final case class Written(visitedPath: String, denied: Long,
+                                   next: Either[String, Epoch], seen: Future[SeenSet])
+
+  /** One crawl's fixed inputs and its round phases. */
+  private final class Crawl(spark: SparkSession, siteDir: String, workDir: String,
+                            cfg: Scheduler.Config, bloomThreshold: Long) {
+    private implicit val ec: ExecutionContext = ExecutionContext.global
+    private val adaptive = cfg.recrawlMinRounds.isDefined
+    private val store = new SnapshotStore(workDir)
     // pages source: plain parquet, or the bucketed catalog table (the
     // Iceberg storage-partitioned stand-in) when cfg asks for it — the
     // bucketed scan joins bucket-aligned with zero Exchange/Sort on the
     // html-payload side (BucketedFetchSpec proves the plan).
-    val pages = cfg.bucketedPagesTable match {
+    private val pages = cfg.bucketedPagesTable match {
       case Some(t) => spark.table(t)
       case None    => spark.read.parquet(s"$siteDir/pages.parquet")
     }
-    val rules = robotsRules(spark, spark.read.parquet(s"$siteDir/robots.parquet")).cache()
-    val robotsDf = rules.toDF()
-    val limits = spark.read.parquet(s"$siteDir/host_limits.parquet")
+    private val rules = robotsRules(spark, spark.read.parquet(s"$siteDir/robots.parquet")).cache()
+    private val robotsDf = rules.toDF()
+    private val limits = spark.read.parquet(s"$siteDir/host_limits.parquet")
     // site-declared rate caps (Crawl-delay) fold into every budget
     // resolution when honorCrawlDelay is on — one Option threaded to all
     // three budget call sites so the epoch assign, the per-round carry
     // ranking, and the next-epoch pre-assign agree on the same budgets
-    val budgetRobots = if (cfg.honorCrawlDelay) Some(robotsDf) else None
+    private val budgetRobots = if (cfg.honorCrawlDelay) Some(robotsDf) else None
 
     // Redirect aliases (requests' invisible-follow made explicit — see
     // Scheduler.Config.redirectMaxHops): when the corpus carries a
@@ -413,7 +431,7 @@ object CrawlJob {
     // per-round iteration. At 10^10 the flatten is one bounded
     // O(maxHops)-equi-join job over only the 3xx captures (a few
     // percent of a web corpus), amortized over the whole crawl.
-    val aliasMap: Option[DataFrame] = {
+    private val aliasMap: Option[DataFrame] = {
       val rp = s"$siteDir/redirects.parquet"
       if (!new java.io.File(rp).exists()) None
       else {
@@ -432,73 +450,197 @@ object CrawlJob {
     // recorded per-row fact — see frontier.FetchRetry): loaded + key-
     // uniquified ONCE per crawl; each round pays one broadcast left-join
     // on the budget-bounded batch, exactly the alias-map shape.
-    val faultMap: Option[DataFrame] = {
+    private val faultMap: Option[DataFrame] = {
       val fp = s"$siteDir/faults.parquet"
       if (!new java.io.File(fp).exists()) None
       else Some(graft.frontier.FetchRetry.loadFaults(spark, fp))
     }
 
-    var round = store.latestVersion.map(_ + 1).getOrElse(0)
+    private def emptyCarry = Carry(emptyFrontier(spark), 0L)
 
-    // ---- epoch + carry state (resumable from the last manifest) ----
-    var assignedPath: String = null
-    var epochStart = 0
-    var assignedTotal = 0L // rows assigned at the epoch boundary
-    var consumed = 0L // assigned rows whose batch has been consumed
-    var maxBatch = -1
-    var carryDf: DataFrame = emptyFrontier(spark)
-    var carryCount = 0L
-    if (round > 0) {
-      val m = store.manifest(round - 1)
-      epochStart = m.metrics("epoch_start").toInt
-      assignedTotal = m.metrics("assigned_total").toLong
-      consumed = m.metrics("assigned_consumed").toLong
-      maxBatch = m.metrics("assigned_max_batch").toInt
-      assignedPath = m.tables("assigned").path
-      carryDf = store.readTable(spark, round - 1, "carry")
-      carryCount = m.tables("carry").rows
-    }
-
-    // seen is committed as per-round DELTAS (append semantics, like a
-    // real Iceberg append — a full rewrite per round would be quadratic
-    // in total crawl size); the live set is a FLAT multi-path read over
-    // the ACTIVE deltas (not an incremental union DAG, which would deepen
-    // the plan every round). With a TTL (cache.py:211-311 recrawl
-    // semantics) the active window excludes deltas older than
-    // ttl rounds — an expired url blocks nothing and a link-rediscovery
-    // re-fetches it. The cumulative Bloom may still contain expired urls:
-    // that is only a false "maybe-seen", corrected by the exact anti-join
-    // over the active window.
-    // Resuming a workDir that ran with expireBeyondTtl: expired versions'
-    // DATA is gone (manifests remain). They are skipped here, but only
-    // legally — an expired version inside the RESUME config's active
-    // window (TTL absent or larger than the original run's) would change
-    // seen semantics silently, so that is a hard error instead of an
-    // AnalysisException on a deleted path halfway into the round.
-    if (round > 0) {
+    /** The state the next round starts from: empty, or rebuilt from the
+      * last committed manifest. */
+    def resume(): RoundState = {
+      val round = store.latestVersion.map(_ + 1).getOrElse(0)
+      val last = if (round == 0) None else Some(store.manifest(round - 1))
+      val carry = last.fold(emptyCarry)(m =>
+        Carry(store.readTable(spark, round - 1, "carry"), m.tables("carry").rows))
+      // Resuming a workDir that ran with expireBeyondTtl: expired
+      // versions' DATA is gone (manifests remain). They are skipped
+      // here, but only legally — an expired version inside the RESUME
+      // config's active window (TTL absent or larger than the original
+      // run's) would change seen semantics silently, so that is a hard
+      // error instead of an AnalysisException on a deleted path halfway
+      // into the round.
       val expiredInWindow = (0 until round).filter(v =>
         store.isExpired(v) && cfg.seenTtlRounds.forall(ttl => round - v <= ttl))
       require(expiredInWindow.isEmpty,
         s"cannot resume: rounds ${expiredInWindow.mkString(",")} were expired by a previous run " +
           s"but fall inside this config's seen-TTL window (seenTtlRounds=${cfg.seenTtlRounds}); " +
           "resume with a seenTtlRounds no larger than the run that expired them")
-    }
-    var seenMeta: Vector[(Int, String, Long)] =
-      if (round == 0) Vector.empty
-      else (0 until round).flatMap { v =>
-        if (store.isExpired(v)) None
-        else { val t = store.manifest(v).tables("seen_delta"); Some((v, t.path, t.rows)) }
+      val deltas = (0 until round).filterNot(store.isExpired).map { v =>
+        val t = store.manifest(v).tables("seen_delta")
+        SeenSet.Delta(v, t.path, t.rows)
       }.toVector
-    def activeSeenMeta(r: Int): Vector[(Int, String, Long)] = cfg.seenTtlRounds match {
-      case Some(ttl) => seenMeta.filter { case (v, _, _) => r - v <= ttl }
-      case None => seenMeta
+      // reconstruct the last freeze (the largest recrawl boundary that
+      // already executed) from the persisted results tables — a killed
+      // run must resume with the identical due snapshot or the epoch's
+      // surviving assigned batches would be re-filtered differently than
+      // the unkilled run filtered them
+      val lastFreeze = if (adaptive && round > 0) ((round - 1) / cfg.recrawlEvery) * cfg.recrawlEvery else 0
+      val due = if (lastFreeze > 0) Some(SeenSet.Due(dueFrontier(lastFreeze), lastFreeze)) else None
+      RoundState(round, last.map(Epoch.fromManifest), carry,
+        SeenSet.open(spark, cfg, workDir, bloomThreshold, deltas, round, due))
     }
-    def seenDfAt(r: Int): DataFrame = {
-      val paths = activeSeenMeta(r).map(_._2)
-      if (paths.isEmpty) emptyFrontier(spark).select("url_hash", "url")
-      else spark.read.parquet(paths: _*).select("url_hash", "url")
+
+    /** One round: seen-window advance, epoch assign, schedule,
+      * fetch+extract, links, bookkeeping writes, commit. None when the
+      * crawl finished before committing it. */
+    def round(prev: RoundState): Option[RoundState] = {
+      val t0 = System.nanoTime()
+      val phase = new PhaseTimer(s"r${prev.round}")
+      val (st, denied) = assignEpoch(prev.copy(seen = prev.seen.advance(prev.round)), phase)
+      val epoch = st.epoch.get
+      val nEpochDenied = denied.fold(0L)(_.n)
+      def release(dfs: DataFrame*): Unit =
+        (dfs ++ denied.map(_.gate)).foreach(_.unpersist())
+      if (epoch.total == 0 && nEpochDenied == 0) { release(); None }
+      else {
+        val sched = schedule(st, epoch)
+        phase("schedule")
+        if (sched.scheduled == 0 && nEpochDenied == 0) {
+          // candidates exhausted (batches and carry both dry) → crawl done
+          release(sched.fresh, sched.selected)
+          None
+        } else {
+          val fetched = fetchExtract(st.round, sched, phase)
+          val (newAllowed, newDenied, newGate) = links(st, sched, fetched.resultsPath)
+          phase("links")
+          val written = bookkeeping(st, epoch, sched, newAllowed,
+            denied.fold(newDenied)(d => newDenied.unionByName(d.rows)), phase)
+          val next = commit(st, epoch, sched, fetched, written, t0)
+          phase("commit")
+          // the seen add ran on its own thread, overlapped with the
+          // epoch-next write and the commit
+          val seen = Await.result(written.seen, Duration.Inf)
+          phase("bloom")
+          // retention: rounds that left the TTL window hold no table any
+          // future round (or resume) reads — drop their data files,
+          // keep manifests. The active epoch's `assigned` dir lives at
+          // version epochStart-1 or epochStart, so never expire past it.
+          if (cfg.expireBeyondTtl) cfg.seenTtlRounds.foreach { ttl =>
+            val upTo = math.min(next.round - ttl, next.epoch.get.start - 1)
+            if (upTo > 0) store.expire(upTo)
+          }
+          release(sched.fresh, sched.selected, newGate)
+          Some(next.copy(seen = seen))
+        }
+      }
     }
-    // ---- adaptive recrawl state: the EPOCH-FROZEN due set ----
+
+    // ---- epoch boundary: one-shot W2 batch assignment ----
+    // Triggered when the epoch's batches are exhausted or the carry
+    // outgrows what remains assigned (amortized-geometric: total
+    // re-assignment work over the crawl is O(frontier · log), never
+    // O(rounds · frontier)). Assignment is a pure re-ordering under a
+    // fixed ranking key, so WHEN it happens cannot change the trace.
+    private def assignEpoch(st: RoundState, phase: PhaseTimer): (RoundState, Option[Denied]) = {
+      val r = st.round
+      // Link-graph re-scoring cadence: at rounds ≡ 0 (mod every) the
+      // WHOLE frontier's priority is replaced by the link-graph rank
+      // over edges accumulated so far, which forces an epoch boundary
+      // (the ranking key changes, so batches must be re-cut). Between
+      // re-score rounds the key is fixed and the epoch-batch stability
+      // argument above holds unchanged; RefCrawl mirrors the same
+      // cadence, so CrawlParitySpec can hold trace parity through it.
+      val rescoreDue = cfg.linkPriorityMode.isDefined && r > 0 && r % cfg.linkPriorityEvery == 0
+      // Adaptive-recrawl cadence: at rounds ≡ 0 (mod recrawlEvery) the
+      // due set is re-frozen and injected, which forces an epoch
+      // boundary (the frontier gains rows) — the same forced-boundary
+      // pattern as the link re-score, and for the same reason: the
+      // injection round is a pure function of the round number, so
+      // RefCrawl mirrors it and trace parity holds through it.
+      val recrawlDue = adaptive && r > 0 && r % cfg.recrawlEvery == 0
+      val boundary = rescoreDue || recrawlDue || st.epoch.forall(e =>
+        r - e.start > e.maxBatch || st.carry.rows > e.total - e.consumed)
+      if (!boundary) (st, None)
+      else {
+        val due = if (recrawlDue) Some(dueFrontier(r)) else None
+        val seen = due.fold(st.seen)(st.seen.freeze(_, r))
+        val input = st.epoch match {
+          case None =>
+            val f = initialFrontier(spark, siteDir, rules)
+            phase("epoch-assign/initial-frontier")
+            f
+          // total == 0 → the assigned dir is a zero-row partitionBy
+          // write (only _SUCCESS; no readable schema) — re-invoking
+          // run() on a completed workDir lands here
+          case Some(e) if e.total == 0 => st.carry.df
+          case Some(e) => spark.read.parquet(e.path)
+            .filter(col("batch_no") >= r - e.start)
+            .select(frontierCols.map(col): _*) // drop batch_no + stored rank
+            .unionByName(st.carry.df)
+        }
+        val fresh0 = seen.notSeen(mergeFrontier(input))
+        // due urls enter AFTER the seen filter (they are, by
+        // construction, seen) and merge against any link-rediscovered
+        // twin already in the input (min depth, max priority — the
+        // injected row's depth 0 and Recrawl.priority win); they carry
+        // no robots risk (only FETCHED urls have history ⇒ they were
+        // allowed, and rules are static per crawl)
+        val fresh = due.fold(fresh0)(d => mergeFrontier(fresh0.unionByName(d)))
+        // F7 at insert: only the round-0 input is un-gated (later epochs
+        // re-rank rows that were gated when they were first inserted)
+        val (allowed, denied) =
+          if (st.epoch.isEmpty) {
+            val (alw, den, gate) = Scheduler.robotsGate(fresh, robotsDf)
+            val d = Denied(den, gate, den.count())
+            phase("epoch-assign/robots-gate")
+            (alw, Some(d))
+          } else (fresh, None)
+        val epoch = assign(if (rescoreDue) rescore(allowed, r) else allowed,
+          s"${store.root}/data/v$r/assigned", r, s"assign_epoch_r$r")
+        phase("epoch-assign")
+        (RoundState(r, Some(epoch), emptyCarry, seen), denied)
+      }
+    }
+
+    /** Cut `frontier` into per-host politeness batches written
+      * partitionBy(batch_no) at `path`, the epoch starting at round
+      * `start`. Row count + max batch ride the write job as an
+      * Observation — no read-back job, and the zero-row case (no part
+      * files, no inferable schema) falls out as (0, null) instead of an
+      * AnalysisException. */
+    private def assign(frontier: DataFrame, path: String, start: Int, obsName: String): Epoch = {
+      val obs = Observation(obsName)
+      Scheduler.assignBatches(frontier, limits, cfg, budgetRobots)
+        .observe(obs, count(lit(1)).as("n"), max("batch_no").as("mb"))
+        .write.partitionBy("batch_no").mode("overwrite").parquet(path)
+      val m = obs.get
+      val n = m("n").asInstanceOf[Long]
+      Epoch(path, start, n, 0L, if (n == 0) -1 else m("mb").asInstanceOf[Int])
+    }
+
+    /** Replace every priority by the round's re-score. */
+    private def rescore(frontier: DataFrame, r: Int): DataFrame =
+      if (cfg.linkPriorityMode.contains("urlshape"))
+        // URL-shape mode needs no graph and no join: the score is a pure
+        // codegen'd function of the url string, evaluated in the same
+        // projection that feeds assignBatches — every url gets a score
+        // (no NULL fallback)
+        frontier.withColumn("priority", graft.url.UrlQuality.qualityScore(col("url")))
+          .select(frontierCols.map(col): _*)
+      else
+        // replace (not merge) priority: once the link graph drives the
+        // frontier, rank IS the signal — urls without an inbound edge yet
+        // fall back to NULL (ranked last, url ASC), exactly like
+        // link-discovered rows between re-scores
+        frontier.drop("priority")
+          .join(linkRanks(spark, store, r, cfg), Seq("url"), "left")
+          .withColumnRenamed("link_rank", "priority")
+          .select(frontierCols.map(col): _*)
+
+    // ---- adaptive recrawl: the EPOCH-FROZEN due set ----
     // At every recrawl boundary (rounds ≡ 0 mod recrawlEvery) the fetch
     // history folds into the due url set, which is (a) injected into the
     // frontier and (b) excluded from the blocking seen set until each
@@ -506,9 +648,7 @@ object CrawlJob {
     // boundary — not per row-read — keeps dueness one deterministic
     // snapshot both the batch assignment and every later round of the
     // epoch agree on, which is what lets RefCrawl mirror it exactly.
-    var dueFrontierDf: DataFrame = null // url, url_hash, host, depth=0, priority
-    var dueFreeze = -1
-    def freezeDue(asOf: Int): Unit = {
+    private def dueFrontier(asOf: Int): DataFrame = {
       val paths = (0 until asOf).filterNot(store.isExpired)
         .map(v => store.manifest(v).tables("results").path)
       val due =
@@ -529,733 +669,380 @@ object CrawlJob {
         }
       // small (due urls only) — checkpoint so the whole-history fold
       // runs once per boundary, not once per downstream consumer
-      dueFrontierDf = due.localCheckpoint(true)
-      dueFreeze = asOf
-    }
-    // seen minus the still-due urls (due AND not refetched since the
-    // freeze): the blocking set every notSeen call uses in adaptive mode
-    def seenWithDue(r: Int): DataFrame = {
-      val base = seenDfAt(r)
-      if (!adaptive || dueFrontierDf == null) base
-      else {
-        val since = seenMeta.filter(_._1 >= dueFreeze).map(_._2)
-        val active =
-          if (since.isEmpty) dueFrontierDf.select("url_hash")
-          else dueFrontierDf.select("url_hash")
-            .join(spark.read.parquet(since: _*).select("url_hash"),
-              Seq("url_hash"), "left_anti")
-        base.join(active, Seq("url_hash"), "left_anti")
-      }
-    }
-    // Resume: reconstruct the last freeze (the largest recrawl boundary
-    // that already executed) from the persisted results tables — a
-    // killed run must resume with the identical due snapshot or the
-    // epoch's surviving assigned batches would be re-filtered
-    // differently than the unkilled run filtered them.
-    if (adaptive && round > 0) {
-      val lastFreeze = ((round - 1) / cfg.recrawlEvery) * cfg.recrawlEvery
-      if (lastFreeze > 0) freezeDue(lastFreeze)
-    }
-    var seen: DataFrame = seenWithDue(round)
-    var seenCount: Long = activeSeenMeta(round).map(_._3).sum
-
-    // Bloom sketch maintained INCREMENTALLY: built once (resume) over the
-    // full seen set, then per-round delta sketches (same capacity/fpp →
-    // compatible bit arrays) merged in — no O(seen) aggregation per round.
-    // Rebuilt (amortized, geometric) when the capacity is outgrown.
-    var bloomCap = math.max(bloomThreshold * 8, seenCount * 4).max(1024L)
-    // Sharded sketch (cfg.bloomShards): the 10^10 path — per-hash-range
-    // Bloom FILES in the work dir instead of one broadcast sketch; every
-    // delta is added from round 0 (a shard gap would be a false negative
-    // = a re-crawl, so shards must always cover the full active seen
-    // set). On resume the shards are rebuilt from the seen set once —
-    // a kill between commit and shard-add can otherwise lose a delta.
-    val shardCfg: Option[ShardedBloom.Shards] = cfg.bloomShards.map { s =>
-      ShardedBloom.Shards(s"$workDir/bloom_shards", s,
-        itemsPerShard = math.max(1024L, bloomCap / s), fpp = 0.03)
-    }
-    shardCfg.foreach { sh =>
-      ShardedBloom.clear(sh.dir)
-      if (seenCount > 0) ShardedBloom.add(seen, sh)
-    }
-    // "cuckoo" swaps the single-sketch prefilter for a deletable one
-    // (frontier.CuckooFilter): trace-identical by construction (both
-    // sketches front the SAME exact anti-join), but under a seen TTL
-    // the expired rounds' deltas are DELETED from the sketch per round
-    // instead of accumulating as stale positives until a rebuild
-    val cuckooMode = shardCfg.isEmpty && cfg.seenSketch == "cuckoo"
-    var bloom: Option[BloomFilter] =
-      if (shardCfg.isEmpty && !cuckooMode && seenCount > bloomThreshold)
-        Some(Frontier.buildBloom(seen, bloomCap)) else None
-    var cuckoo: Option[graft.frontier.CuckooFilter] =
-      if (cuckooMode && seenCount > bloomThreshold)
-        Some(graft.frontier.CuckooFilter.build(seen, bloomCap)) else None
-    // rounds whose deltas are already absent from the cuckoo sketch
-    // (deleted, or excluded by a rebuild from the windowed seen)
-    var cuckooDeletedThrough =
-      cfg.seenTtlRounds.map(ttl => round - ttl - 1).getOrElse(-1)
-    // expiry accounting (manifest metrics when cuckooMode): cumulative
-    // deleted entries + fallback rebuild count — the observable proof
-    // that the delete path, not its rebuild safety net, carried expiry
-    var cuckooExpiredDeletes = 0L
-    var cuckooExpiryRebuilds = 0L
-    def bloomAdd(delta: DataFrame): Unit = shardCfg match {
-      case Some(sh) => ShardedBloom.add(delta, sh)
-      case None if cuckooMode =>
-        if (seenCount > bloomThreshold) {
-          if (cuckoo.isEmpty || seenCount > bloomCap / 2) {
-            bloomCap = math.max(seenCount * 4, bloomCap)
-            cuckoo = Some(graft.frontier.CuckooFilter.build(seen, bloomCap))
-            cfg.seenTtlRounds.foreach(ttl => cuckooDeletedThrough = round - ttl - 1)
-          } else {
-            // same no-shared-mutation discipline as the bloom branch:
-            // fold the published sketch INTO the fresh delta sketch
-            // (mergeInPlace only READS its argument) and republish
-            val merged = graft.frontier.CuckooFilter
-              .buildWithBuckets(delta, cuckoo.get.numBuckets)
-            merged.mergeInPlace(cuckoo.get)
-            cuckoo = Some(merged)
-          }
-        }
-      case None if seenCount > bloomThreshold =>
-        if (bloom.isEmpty || seenCount > bloomCap / 2) {
-          bloomCap = math.max(seenCount * 4, bloomCap)
-          bloom = Some(Frontier.buildBloom(seen, bloomCap))
-        } else {
-          // merge INTO the fresh delta sketch and republish the var —
-          // never mutate the already-published object: in local mode a
-          // broadcast can alias it, and bloomAdd now runs concurrently
-          // with the next-epoch job whose plan captured the pre-delta
-          // sketch (OR-only mutation would still be read-safe, but
-          // no-shared-mutation needs no such argument)
-          val merged = Frontier.buildBloom(delta, bloomCap)
-          merged.mergeInPlace(bloom.get)
-          bloom = Some(merged)
-        }
-      case None => ()
-    }
-    def notSeenDf(df: DataFrame, seenDf: DataFrame): DataFrame = shardCfg match {
-      case Some(sh) => ShardedBloom.notSeen(df, seenDf, sh)
-      case None if cuckooMode => Frontier.notSeenCuckoo(df, seenDf, cuckoo)
-      case None => Frontier.notSeen(df, seenDf, bloom)
+      due.localCheckpoint(true)
     }
 
-    val debugTiming = sys.env.contains("GRAFT_TIMING")
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = {
-      if (debugTiming) {
-        val now = System.nanoTime()
-        println(f"[timing] r$round $name: ${(now - tPhase) / 1e9}%.1fs")
-        tPhase = now
-      }
-    }
-
-    var done = false
-    while (!done && round < maxRounds) {
-      val t0 = System.nanoTime()
-      tPhase = t0
-      var batchIdx = round - epochStart
-      // refresh the seen window (it shifts per round under a TTL; under
-      // adaptive recrawl the due-exclusion shrinks as refetch deltas land)
-      if (cfg.seenTtlRounds.isDefined || (adaptive && dueFrontierDf != null)) {
-        seen = seenWithDue(round)
-        seenCount = activeSeenMeta(round).map(_._3).sum
-        // cuckoo expiry: rounds that left the TTL window retire by
-        // DELETING their deltas from a COPY of the sketch (republish —
-        // in-flight broadcasts of the old sketch never see mutation).
-        // O(expired delta + slot-array memcpy) per shift vs the bloom
-        // path's stale positives. A missing delta file (snapshot expire
-        // already dropped it), a not-found delete (bookkeeping drift),
-        // or a saturated sketch falls back to a full rebuild from the
-        // windowed seen — the self-healing path; either way no false
-        // negative can be introduced (deletes only ever remove entries
-        // whose round is OUTSIDE the exact-join window).
-        if (cuckooMode && cfg.seenTtlRounds.isDefined && cuckoo.isDefined) {
-          val ttl = cfg.seenTtlRounds.get
-          val expiring = seenMeta.filter { case (v, _, _) =>
-            v > cuckooDeletedThrough && round - v > ttl }
-          if (expiring.nonEmpty) {
-            val cf = cuckoo.get.copySketch()
-            var ok = !cf.saturated
-            var nDeleted = 0L
-            expiring.foreach { case (_, path, _) =>
-              if (ok) {
-                if (!new java.io.File(path).exists()) ok = false
-                else {
-                  val it = spark.read.parquet(path).select("url_hash")
-                    .as[Long](org.apache.spark.sql.Encoders.scalaLong).toLocalIterator()
-                  while (ok && it.hasNext) {
-                    ok = cf.delete(it.next())
-                    if (ok) nDeleted += 1
-                  }
-                }
-              }
-            }
-            if (ok) { cuckoo = Some(cf); cuckooExpiredDeletes += nDeleted }
-            else {
-              bloomCap = math.max(seenCount * 4, bloomCap)
-              cuckoo = Some(graft.frontier.CuckooFilter.build(seen, bloomCap))
-              cuckooExpiryRebuilds += 1L
-            }
-            cuckooDeletedThrough = math.max(cuckooDeletedThrough, round - ttl - 1)
-          }
-        }
-      }
-
-      // ---- epoch boundary: one-shot W2 batch assignment ----
-      // Triggered when the epoch's batches are exhausted or the carry
-      // outgrows what remains assigned (amortized-geometric: total
-      // re-assignment work over the crawl is O(frontier · log), never
-      // O(rounds · frontier)). Assignment is a pure re-ordering under a
-      // fixed ranking key, so WHEN it happens cannot change the trace.
-      var epochDenied: DataFrame = null
-      var epochGate: DataFrame = null
-      var nEpochDenied = 0L
-      // Link-graph re-scoring cadence: at rounds ≡ 0 (mod every) the
-      // WHOLE frontier's priority is replaced by the link-graph rank
-      // over edges accumulated so far, which forces an epoch boundary
-      // (the ranking key changes, so batches must be re-cut). Between
-      // re-score rounds the key is fixed and the epoch-batch stability
-      // argument above holds unchanged; RefCrawl mirrors the same
-      // cadence, so CrawlParitySpec can hold trace parity through it.
-      val rescoreDue = cfg.linkPriorityMode.isDefined && round > 0 &&
-        round % cfg.linkPriorityEvery == 0
-      // Adaptive-recrawl cadence: at rounds ≡ 0 (mod recrawlEvery) the
-      // due set is re-frozen and injected, which forces an epoch
-      // boundary (the frontier gains rows) — the same forced-boundary
-      // pattern as the link re-score, and for the same reason: the
-      // injection round is a pure function of the round number, so
-      // RefCrawl mirrors it and trace parity holds through it.
-      val recrawlDue = adaptive && round > 0 && round % cfg.recrawlEvery == 0
-      if (assignedPath == null || batchIdx > maxBatch ||
-          carryCount > (assignedTotal - consumed) || rescoreDue || recrawlDue) {
-        if (recrawlDue) {
-          freezeDue(round)
-          seen = seenWithDue(round)
-        }
-        val input =
-          if (round == 0) { val f = initialFrontier(spark, siteDir, rules); phase("epoch-assign/initial-frontier"); f }
-          // assignedTotal == 0 → the assigned dir is a zero-row
-          // partitionBy write (only _SUCCESS; no readable schema) —
-          // re-invoking run() on a completed workDir lands here
-          else if (assignedTotal == 0) carryDf
-          else spark.read.parquet(assignedPath)
-            .filter(col("batch_no") >= batchIdx)
-            .select(frontierCols.map(col): _*) // drop batch_no + stored rank
-            .unionByName(carryDf)
-        val fresh0 = notSeenDf(mergeFrontier(input), seen)
-        // due urls enter AFTER the seen filter (they are, by
-        // construction, seen) and merge against any link-rediscovered
-        // twin already in the input (min depth, max priority — the
-        // injected row's depth 0 and Recrawl.priority win); they carry
-        // no robots risk (only FETCHED urls have history ⇒ they were
-        // allowed, and rules are static per crawl)
-        val fresh =
-          if (recrawlDue) mergeFrontier(fresh0.unionByName(dueFrontierDf))
-          else fresh0
-        // F7 at insert: only the round-0 input is un-gated (later epochs
-        // re-rank rows that were gated when they were first inserted)
-        val allowed = if (round == 0) {
-          val (alw, den, gate) = Scheduler.robotsGate(fresh, robotsDf)
-          epochDenied = den; epochGate = gate
-          nEpochDenied = den.count()
-          phase("epoch-assign/robots-gate")
-          alw
-        } else fresh
-        val toAssign =
-          if (rescoreDue) {
-            if (cfg.linkPriorityMode.contains("urlshape"))
-              // URL-shape mode needs no graph and no join: the score is
-              // a pure codegen'd function of the url string, evaluated
-              // in the same projection that feeds assignBatches — every
-              // url gets a score (no NULL fallback)
-              allowed.withColumn("priority",
-                  graft.url.UrlQuality.qualityScore(col("url")))
-                .select(frontierCols.map(col): _*)
-            else
-              // replace (not merge) priority: once the link graph drives
-              // the frontier, rank IS the signal — urls without an inbound
-              // edge yet fall back to NULL (ranked last, url ASC), exactly
-              // like link-discovered rows between re-scores
-              allowed.drop("priority")
-                .join(linkRanks(spark, store, round, cfg), Seq("url"), "left")
-                .withColumnRenamed("link_rank", "priority")
-                .select(frontierCols.map(col): _*)
-          } else allowed
-        val path = s"${store.root}/data/v$round/assigned"
-        // row count + max batch ride the write job as an Observation —
-        // no read-back job, and the zero-row case (no part files, no
-        // inferable schema) falls out as (0, null) instead of an
-        // AnalysisException
-        val asgObs = org.apache.spark.sql.Observation(s"assign_epoch_r$round")
-        Scheduler.assignBatches(toAssign, limits, cfg, budgetRobots)
-          .observe(asgObs, count(lit(1)).as("n"), max("batch_no").as("mb"))
-          .write.partitionBy("batch_no").mode("overwrite").parquet(path)
-        val asgM = asgObs.get
-        assignedTotal = asgM("n").asInstanceOf[Long]
-        maxBatch = if (assignedTotal == 0) -1 else asgM("mb").asInstanceOf[Int]
-        assignedPath = path
-        epochStart = round
-        batchIdx = 0
-        consumed = 0
-        carryDf = emptyFrontier(spark)
-        carryCount = 0
-        phase("epoch-assign")
-      }
-
-      if (assignedTotal == 0 && nEpochDenied == 0) {
-        done = true
-        if (epochGate != null) epochGate.unpersist()
-      } else {
-        // ---- round: consume ONE batch partition + the carry ----
-        val batchCols = frontierCols :+ "rank"
-        val batchDf0 =
-          if (assignedTotal == 0)
-            emptyFrontier(spark).withColumn("rank", lit(null).cast("int"))
-          else spark.read.parquet(assignedPath)
-            .filter(col("batch_no") === batchIdx).drop("batch_no")
-            .select(batchCols.map(col): _*)
-        // single-batch epoch (maxBatch == 0 — every epoch of a
-        // budget-unbound crawl): the batch IS the whole assigned table,
-        // whose row count already rode the assign write's Observation —
-        // skip the per-round count job (pure driver latency, the kind
-        // that caps low-core scaling efficiency)
-        val nBatchRows =
-          if (assignedTotal == 0) 0L
-          else if (maxBatch == 0 && batchIdx == 0) assignedTotal
-          else batchDf0.count() // partition-pruned metadata count
-        // FAST PATH: the epoch was assigned at THIS round's boundary
-        // (epoch block above, or the previous round's commit-time
-        // assignment) and there is no carry — the batch is already
-        // merged, seen-filtered, and ranked, and nothing can have
-        // entered the seen set since assignment, so the stored
-        // within-batch rank IS the round rank. Skips a merge shuffle, a
-        // Bloom/anti-join pass, and a window per round (measured 2–3 s
-        // of the ~8 s rounds in the budget-unbound bench). Budget-bound
-        // epochs (carry present or batchIdx > 0) take the general path,
-        // whose re-rank under the fixed key is trace-equivalent —
-        // CrawlParitySpec holds parity over both.
-        val epochFresh = carryCount == 0 && epochStart == round
-        val (fresh, selected) =
-          if (epochFresh) {
-            val sel = cfg.globalBudget match {
-              case Some(g) => batchDf0
-                .orderBy(desc_nulls_last("priority"), asc("host"), asc("rank"))
-                .limit(g.toInt)
-              case None => batchDf0
-            }
-            (batchDf0.select(frontierCols.map(col): _*).cache(), sel.cache())
-          } else {
-            val fr = notSeenDf(
-              mergeFrontier(batchDf0.select(frontierCols.map(col): _*).unionByName(carryDf)),
-              seen).cache()
-            (fr, Scheduler.rankSelect(fr, limits, cfg, budgetRobots).cache())
-          }
-        // one action gives the scheduled count AND the trace's per-host
-        // lineage (the manifest requirement): when the round touches
-        // ≤10k hosts (the common case — politeness bounds hosts/round)
-        // the groupBy result IS the complete lineage; only a >10k-host
-        // round pays a second pass for the bounded top-N + rollup
-        val maxLineageParts = 10000
-        def lineageAndCount(): (Long, Map[String, Long]) = {
-          val hostRows = selected.groupBy("host").count()
-            .limit(maxLineageParts + 1).collect()
-            .map(r => (r.getString(0), r.getLong(1)))
-          if (hostRows.length <= maxLineageParts)
-            (hostRows.map(_._2).sum, hostRows.toMap)
-          else {
-            val hc = selected.groupBy("host").count().cache()
-            val n = hc.agg(coalesce(sum("count"), lit(0L))).head.getLong(0)
-            val top = hc.orderBy(desc("count"), asc("host")).limit(maxLineageParts)
-              .collect().map(r => (r.getString(0), r.getLong(1)))
-            hc.unpersist()
-            val m = top.toMap
-            val counted = top.map(_._2).sum
-            (n, if (n > counted) m + ("<other>" -> (n - counted)) else m)
-          }
-        }
-        // Fast path: the scheduled count is KNOWN analytically (the whole
-        // pruned batch, min'd with the W4 cap), so the lineage groupBy —
-        // the only remaining pre-fetch action on `selected` — runs
+    // ---- round: consume ONE batch partition + the carry ----
+    private def schedule(st: RoundState, epoch: Epoch): Schedule = {
+      val batchIdx = st.round - epoch.start
+      val batch =
+        if (epoch.total == 0) emptyFrontier(spark).withColumn("rank", lit(null).cast("int"))
+        else spark.read.parquet(epoch.path)
+          .filter(col("batch_no") === batchIdx).drop("batch_no")
+          .select((frontierCols :+ "rank").map(col): _*)
+      // single-batch epoch (maxBatch == 0 — every epoch of a
+      // budget-unbound crawl): the batch IS the whole assigned table,
+      // whose row count already rode the assign write's Observation —
+      // skip the per-round count job (pure driver latency, the kind
+      // that caps low-core scaling efficiency)
+      val batchRows =
+        if (epoch.total == 0) 0L
+        else if (epoch.maxBatch == 0 && batchIdx == 0) epoch.total
+        else batch.count() // partition-pruned metadata count
+      // A4 cache-stats accounting (cache.py:598-649 analogue): requests
+      // entering this round vs requests skipped by the seen set (Bloom
+      // fast-path + exact anti-join + in-round dedup merge = the
+      // request-cache hit semantics).
+      val candidates = batchRows + st.carry.rows
+      // FAST PATH: the epoch was assigned at THIS round's boundary
+      // (epoch block above, or the previous round's commit-time
+      // assignment) and there is no carry — the batch is already
+      // merged, seen-filtered, and ranked, and nothing can have
+      // entered the seen set since assignment, so the stored
+      // within-batch rank IS the round rank. Skips a merge shuffle, a
+      // Bloom/anti-join pass, and a window per round (measured 2–3 s
+      // of the ~8 s rounds in the budget-unbound bench). Budget-bound
+      // epochs (carry present or batchIdx > 0) take the general path,
+      // whose re-rank under the fixed key is trace-equivalent —
+      // CrawlParitySpec holds parity over both.
+      if (st.carry.rows == 0 && epoch.start == st.round) {
+        val fresh = batch.select(frontierCols.map(col): _*).cache()
+        val selected = cfg.globalBudget.fold(batch)(g => batch
+          .orderBy(desc_nulls_last("priority"), asc("host"), asc("rank"))
+          .limit(g.toInt)).cache()
+        // the scheduled count is KNOWN analytically (the whole pruned
+        // batch, min'd with the W4 cap), so the lineage groupBy — the
+        // only remaining pre-fetch action on `selected` — runs
         // CONCURRENTLY with the extract write and is awaited at commit.
-        // This removes the last serialized scheduling job from the
-        // budget-unbound round (the shape whose fixed per-round latency
-        // caps low-core scaling efficiency). General path: the ranked
-        // count requires the job anyway, so it stays synchronous.
-        val (nScheduled, lineageF) =
-          if (epochFresh) {
-            val n = cfg.globalBudget.map(g => math.min(g, nBatchRows)).getOrElse(nBatchRows)
-            val f =
-              if (n == 0) scala.concurrent.Future.successful(Map.empty[String, Long])
-              else scala.concurrent.Future(lineageAndCount()._2)(
-                scala.concurrent.ExecutionContext.global)
-            (n, f)
-          } else {
-            val (n, m) = lineageAndCount()
-            (n, scala.concurrent.Future.successful(m))
-          }
-        // A4 cache-stats accounting (cache.py:598-649 analogue): requests
-        // entering this round vs requests skipped by the seen set (Bloom
-        // fast-path + exact anti-join + in-round dedup merge = the
-        // request-cache hit semantics). fresh is already materialized by
-        // the schedule actions, so this count reads cached blocks.
-        val nCandidates = nBatchRows + carryCount
-        // fast path: fresh IS the pruned batch (nCandidates == nBatchRows
-        // and no carry), so the hit count is identically 0 — skip the
-        // count job rather than run it to compute a constant
-        val nCacheHits =
-          if (epochFresh) 0L
-          else math.max(0L, nCandidates - fresh.count())
-        phase("schedule")
-
-        if (nScheduled == 0 && nEpochDenied == 0) {
-          // candidates exhausted (batches and carry both dry) → crawl done
-          done = true
-          fresh.unpersist(); selected.unpersist()
-          if (epochGate != null) epochGate.unpersist()
-        } else {
-          // "fetch" = equi join against the pages table (J4). The batch is
-          // politeness-budget-bounded, so broadcast IT into the pages scan:
-          // pages stream through a hash probe with no shuffle/sort of the
-          // (html-payload-heavy) big side. An SMJ here re-sorts the whole
-          // pages table every round. At the 10^10 design point with 10^8
-          // batches, the equivalent is a bucketed/storage-partitioned pages
-          // table joined on url_hash (no big-side shuffle either); AQE
-          // skew-join covers the fallback path.
-          val batchCols = selected.select("url", "url_hash", "host", "depth", "rank")
-          val fetched = aliasMap match {
-            case None => cfg.bucketedPagesTable match {
-              case Some(_) =>
-                // bucketed fetch: no broadcast hint — the bucket-aligned
-                // pages scan has no Exchange either way, and letting the
-                // planner shuffle only the batch side into bucket
-                // alignment is the 10^10 shape (a broadcast batch also
-                // preserves it; AQE picks per batch size).
-                pages.join(batchCols, Seq("url"), "inner")
-              case None =>
-                if (nScheduled <= 2000000L)
-                  pages.join(broadcast(batchCols), Seq("url"), "inner")
-                else selected.join(pages, Seq("url"), "inner")
-            }
-            case Some(am) =>
-              // alias resolution folds into the batch side of the SAME
-              // fetch plan: rows whose chain failed (redir set,
-              // redirect_final null) are unfetchable and land in
-              // `missing`; the rest fetch the destination's payload and
-              // attribute it to the REQUESTED url (scraper.py:158-169 —
-              // cache key, conversion base, chunk source_url all use the
-              // requested url).
-              val bf = batchCols.join(broadcast(am), Seq("url"), "left")
-                .filter(col("redir").isNull || col("redirect_final").isNotNull)
-                .select(col("url").as("req_url"), col("url_hash"), col("host"),
-                  col("depth"), col("rank"),
-                  coalesce(col("redirect_final"), col("url")).as("fetch_url"))
-              val pj = cfg.bucketedPagesTable match {
-                case Some(_) => pages.join(bf, pages("url") === bf("fetch_url"), "inner")
-                case None =>
-                  if (nScheduled <= 2000000L)
-                    pages.join(broadcast(bf), pages("url") === bf("fetch_url"), "inner")
-                  else pages.join(bf, pages("url") === bf("fetch_url"), "inner")
-              }
-              pj.drop("url").withColumnRenamed("req_url", "url")
-          }
-          // redirect accounting rides the extract write (url != fetch_url
-          // ⇔ the row arrived via an alias) — no extra job
-          val redirObs = org.apache.spark.sql.Observation(s"redir_r$round")
-          val fetchedAliased =
-            if (aliasMap.isDefined)
-              fetched.observe(redirObs, coalesce(sum(when(
-                col("url") =!= col("fetch_url"), 1L)), lit(0L)).as("n_redirected"))
-            else fetched
-          // transient-fault replay (FetchRetry): attempt classification
-          // + exhausted-row removal fold into the same fetch plan; the
-          // failure/retry counts ride the extract write's Observation
-          // (CollectMetrics sits BELOW the fetch_ok filter, so it sees
-          // every scheduled-and-present row) — no extra job
-          val faultObs = org.apache.spark.sql.Observation(s"fault_r$round")
-          val fetchedForExtract = faultMap match {
-            case None => fetchedAliased
-            case Some(fm) =>
-              graft.frontier.FetchRetry
-                .withAttempts(fetchedAliased, fm, cfg.fetchMaxRetries)
-                .observe(faultObs,
-                  coalesce(sum(when(!col("fetch_ok"), 1L)), lit(0L))
-                    .as("n_fetch_failed"),
-                  coalesce(sum(when(col("fetch_ok"),
-                    col("fetch_attempts").cast("long") - 1L)), lit(0L))
-                    .as("n_retry_attempts"))
-                .filter(col("fetch_ok"))
-                .drop("fetch_ok", "fetch_attempts")
-          }
-          // one typed parse pass written STRAIGHT to the snapshot's results
-          // table (markdown + outlinks + chunk structs inline) — parquet IS
-          // the round's materialization; persist()/cache() of this wide DF
-          // costs more than the parquet write (in-memory columnar builders
-          // on big string columns) and a second consumer would re-parse.
-          // All derived tables read back columnar + pruned.
-          val resultsPath = s"${store.root}/data/v$round/results"
-          // accounting (row count + chunk sum) rides the WRITE job as an
-          // Observation — zero extra jobs, zero re-scan of the output
-          val exObs = org.apache.spark.sql.Observation(s"extract_r$round")
-          extract(spark, fetchedForExtract, cfg).toDF()
-            .withColumn("round", lit(round))
-            // content fingerprint, stored AT extract so the adaptive-
-            // recrawl history pass reads (url, round, fp) columnar and
-            // never re-touches the markdown payload
-            .withColumn("fp", xxhash64(col("markdown")))
-            .observe(exObs, count(lit(1)).as("n_rows"),
-              coalesce(sum(col("n_chunks").cast("long")), lit(0L)).as("n_chunks"))
-            .write.mode("overwrite").parquet(resultsPath)
-          val extracted = spark.read.parquet(resultsPath)
-          val exM = exObs.get
-          val nFetched = exM("n_rows").asInstanceOf[Long]
-          val nChunks = exM("n_chunks").asInstanceOf[Long]
-          phase("fetch+extract")
-
-          // opt-in raw-capture archive (Config.archiveWarc): the round's
-          // successful payloads leave as member-per-record gzip WARC +
-          // a recordAt-addressable index under the snapshot dir. Rebuilt
-          // from `fetched` WITHOUT the metric Observations (a second
-          // action on the observed plan would double-fire them); the
-          // fault filter is re-applied so only payloads that actually
-          // arrived are archived. Capture attribution matches extract:
-          // requested url, the matched page row's warc_ts.
-          var nWarcCaptures = -1L
-          if (cfg.archiveWarc) {
-            val src = faultMap match {
-              case None => fetched
-              case Some(fm) => graft.frontier.FetchRetry
-                .withAttempts(fetched, fm, cfg.fetchMaxRetries)
-                .filter(col("fetch_ok"))
-            }
-            val idx = graft.sources.WarcWriter.writeWarcFiles(
-              src.select(col("url"), col("warc_ts"), lit(200L).as("status"), col("html")),
-              s"${store.root}/data/v$round/warc", gzip = true)
-            idx.write.mode("overwrite")
-              .parquet(s"${store.root}/data/v$round/warc_index")
-            nWarcCaptures = idx.count() // local: idx is checkpointed
-            phase("warc-archive")
-          }
-
-          // frontier growth: outlinks → canonical keys → depth+1 (G6),
-          // seen-filtered, then robots-gated AT INSERT (F7)
-          val newLinks0 = extracted
-            .select(explode(col("outlinks")).as("raw_url"), (col("depth") + 1).as("depth"))
-            .filter(col("depth") <= cfg.maxDepth)
-          val newLinks = Frontier.withFrontierKeys(newLinks0, "raw_url")
-            .groupBy("url", "url_hash", "host")
-            .agg(min("depth").as("depth"))
-            .withColumn("priority", lit(null).cast("double"))
-            .select(frontierCols.map(col): _*)
-          // second anti-join excludes THIS round's selections (not yet in
-          // the committed seen set / Bloom). The right side is just the
-          // round's url_hash column (≤ budget × 8 bytes) — broadcast it
-          // so the 10M-row outlink set is not shuffled for it.
-          val newFresh = notSeenDf(newLinks, seen)
-            .join(broadcast(selected.select("url_hash")), Seq("url_hash"), "left_anti")
-          val (newAllowed, newDenied, newGate) = Scheduler.robotsGate(newFresh, robotsDf)
-          phase("links")
-
-          // ONE `visited` table = scheduled rows (rank set) ∪ denied rows
-          // (rank null); seen_delta and trace are merge-on-read views of
-          // it — one write job per round instead of three
-          val deniedAll =
-            if (epochDenied != null) newDenied.unionByName(epochDenied) else newDenied
-          // the denied count rides the visited WRITE as an Observation
-          // (rank is null ⇔ denied) instead of its own count() job
-          val visitObs = org.apache.spark.sql.Observation(s"visited_r$round")
-          val visited = selected
-            .select(lit(round).as("round"), col("host"), col("rank").cast("int").as("rank"),
-              col("url"), col("url_hash"))
-            .unionByName(deniedAll.select(lit(round).as("round"), col("host"),
-              lit(null).cast("int").as("rank"), col("url"), col("url_hash")))
-            .observe(visitObs,
-              coalesce(sum(when(col("rank").isNull, 1L).otherwise(0L)), lit(0L)).as("n_denied"))
-
-          // carry′ = unselected candidates ∪ new allowed links — size is
-          // ∝ the round's delta + displaced rows, NOT the total frontier.
-          // Fast path without a W4 cap: every batch row was selected, so
-          // the unselected side is empty and newAllowed is ALREADY
-          // unique per url (the newLinks groupBy) — the merge groupBy
-          // would be one more O(delta) shuffle for nothing.
-          val carryNext =
-            if (epochFresh && cfg.globalBudget.isEmpty)
-              newAllowed.select(frontierCols.map(col): _*)
-            else mergeFrontier(
-              fresh.join(broadcast(selected.select("url_hash")), Seq("url_hash"), "left_anti")
-                .unionByName(newAllowed))
-
-          val nMissing = nScheduled - nFetched
-
-          // The round's two bookkeeping writes — `visited` and
-          // carry/next-epoch — are independent: run them CONCURRENTLY so
-          // one write's task waves fill the other's scheduling gaps
-          // (a wall-clock win exactly when idle task slots exist, i.e.
-          // at higher core counts; a 1-core run serializes them anyway).
-          val visitedPath = s"${store.root}/data/v$round/visited"
-          val visitedF = scala.concurrent.Future {
-            visited.write.mode("overwrite").parquet(visitedPath)
-          }(scala.concurrent.ExecutionContext.global)
-
-          // Seen-set + Bloom maintenance CHAINED onto the visited write
-          // and overlapped with the epoch-next assign below (it was the
-          // last serialized job of every round). Safe because (a) the
-          // main thread does not touch seenMeta/seen/seenCount/bloom
-          // between this launch and the Await (commit + state advance
-          // read neither), (b) this round's in-flight plans captured
-          // their own references to the PRE-delta sketch, which bloomAdd
-          // never mutates (the merge path now merges INTO the fresh
-          // delta sketch and republishes the var; the sharded path's
-          // publish is generation-fenced), and (c) the await below
-          // happens-before every next-round read of these vars.
-          val thisRound = round
-          val bloomF = visitedF.map { _ =>
-            val nDen = visitObs.get("n_denied").asInstanceOf[Long]
-            seenMeta = seenMeta :+ ((thisRound, visitedPath, nScheduled + nDen))
-            seen = seenDfAt(thisRound)
-            seenCount += nScheduled + nDen
-            bloomAdd(spark.read.parquet(visitedPath))
-          }(scala.concurrent.ExecutionContext.global)
-
-          // Epoch fast-path: this round consumed the LAST assigned batch,
-          // so next round would re-epoch from (∅ remaining ∪ carry).
-          // Assign the next epoch NOW and commit it directly — the
-          // carry-table write + read-back + re-write as `assigned` was a
-          // full extra round-trip of the frontier delta every round in a
-          // budget-unbound crawl. (Budget-BOUND crawls keep the carry
-          // path: their epoch amortizes over many rounds.)
-          val epochExhausted = batchIdx >= maxBatch
-          // …but not when the NEXT round re-scores priorities from the
-          // link graph: a pre-assignment under the stale ranking key
-          // would be thrown away at the boundary. Write the carry and
-          // let the boundary block re-score + assign.
-          val nextIsRescore = (cfg.linkPriorityMode.isDefined &&
-            (round + 1) % cfg.linkPriorityEvery == 0) ||
-            (adaptive && (round + 1) % cfg.recrawlEvery == 0)
-          val preAssignNext = epochExhausted && !nextIsRescore
-          var nextAssignedPath: String = null
-          var nextTotal = 0L
-          var nextMax = -1
-          val carryPath = s"${store.root}/data/v$round/carry"
-          if (preAssignNext) {
-            nextAssignedPath = s"${store.root}/data/v$round/assigned_next"
-            // stats ride the write job (see the epoch-assign Observation)
-            val nxObs = org.apache.spark.sql.Observation(s"assign_next_r$round")
-            Scheduler.assignBatches(carryNext, limits, cfg, budgetRobots)
-              .observe(nxObs, count(lit(1)).as("n"), max("batch_no").as("mb"))
-              .write.partitionBy("batch_no").mode("overwrite").parquet(nextAssignedPath)
-            val nxM = nxObs.get
-            nextTotal = nxM("n").asInstanceOf[Long]
-            nextMax = if (nextTotal == 0) -1 else nxM("mb").asInstanceOf[Int]
-            phase("epoch-next")
-          } else {
-            carryNext.write.mode("overwrite").parquet(carryPath)
-          }
-          scala.concurrent.Await.result(visitedF, scala.concurrent.duration.Duration.Inf)
-          val nDenied = visitObs.get("n_denied").asInstanceOf[Long]
-
-          val elapsed = (System.nanoTime() - t0) / 1e9
-          val (committedEpochStart, committedTotal, committedConsumed, committedMax) =
-            if (preAssignNext) (round + 1, nextTotal, 0L, nextMax)
-            else (epochStart, assignedTotal, consumed + nBatchRows, maxBatch)
-          store.commit(spark, round,
-            Map.empty,
-            Map(
-              "scheduled" -> nScheduled.toDouble,
-              "fetched" -> nFetched.toDouble,
-              "missing" -> nMissing.toDouble,
-              "robots_denied" -> nDenied.toDouble,
-              "cache_candidates" -> nCandidates.toDouble,
-              "cache_hits" -> nCacheHits.toDouble,
-              "chunks" -> nChunks.toDouble,
-              "elapsed_sec" -> elapsed,
-              "epoch_start" -> committedEpochStart.toDouble,
-              "assigned_total" -> committedTotal.toDouble,
-              "assigned_consumed" -> committedConsumed.toDouble,
-              "assigned_max_batch" -> committedMax.toDouble) ++
-              (if (aliasMap.isDefined)
-                Map("redirects_followed" ->
-                  redirObs.get("n_redirected").asInstanceOf[Long].toDouble)
-              else Map.empty) ++
-              (if (faultMap.isDefined) {
-                val fm = faultObs.get
-                Map("fetch_failed" ->
-                  fm("n_fetch_failed").asInstanceOf[Long].toDouble,
-                  "retry_attempts" ->
-                    fm("n_retry_attempts").asInstanceOf[Long].toDouble)
-              } else Map.empty) ++
-              (if (cfg.archiveWarc)
-                Map("warc_captures" -> nWarcCaptures.toDouble)
-              else Map.empty) ++
-              (if (cuckooMode)
-                Map("cuckoo_expired_deletes" -> cuckooExpiredDeletes.toDouble,
-                  "cuckoo_expiry_rebuilds" -> cuckooExpiryRebuilds.toDouble)
-              else Map.empty),
-            partitionKeyCol = Some("host"),
-            knownCounts = Map(
-              "visited" -> (nScheduled + nDenied),
-              "seen_delta" -> (nScheduled + nDenied),
-              "results" -> nFetched,
-              "chunks" -> nChunks,
-              "trace" -> nScheduled,
-              "assigned" -> committedTotal) ++
-              (if (preAssignNext) Map("carry" -> 0L) else Map.empty),
-            preWritten = Map("results" -> resultsPath,
-              "visited" -> visitedPath,
-              "assigned" -> (if (preAssignNext) nextAssignedPath else assignedPath)) ++
-              (if (preAssignNext) Map.empty else Map("carry" -> carryPath)),
-            knownLineage = Map("trace" -> scala.concurrent.Await.result(
-              lineageF, scala.concurrent.duration.Duration.Inf)),
-            // chunks = merge-on-read view over results: the chunk rows
-            // are already materialized (nested) in the results parquet —
-            // a second flat write would double the round's largest write
-            viewTables = Map(
-              "chunks" -> (resultsPath, "explode_chunks"),
-              "seen_delta" -> (visitedPath, "seen_from_visited"),
-              "trace" -> (visitedPath, "trace_from_visited")) ++
-              (if (preAssignNext) Map("carry" -> (visitedPath, "empty_frontier"))
-               else Map.empty))
-          phase("commit")
-
-          // advance state from the committed manifest
-          val m = store.manifest(round)
-          if (preAssignNext) {
-            assignedPath = nextAssignedPath
-            epochStart = round + 1
-            assignedTotal = nextTotal
-            maxBatch = nextMax
-            consumed = 0
-            carryDf = emptyFrontier(spark)
-            carryCount = 0
-          } else {
-            carryCount = m.tables("carry").rows
-            carryDf = store.readTable(spark, round, "carry")
-            consumed += nBatchRows
-          }
-          // seen-window advance + sketch add ran on the bloomF thread,
-          // overlapped with the epoch-next assign and the commit; this
-          // await publishes those var writes to every later read
-          scala.concurrent.Await.result(bloomF, scala.concurrent.duration.Duration.Inf)
-          phase("bloom")
-
-          // retention: rounds that left the TTL window hold no table any
-          // future round (or resume) reads — drop their data files,
-          // keep manifests. The active epoch's `assigned` dir lives at
-          // version epochStart-1 or epochStart, so never expire past it.
-          if (cfg.expireBeyondTtl) cfg.seenTtlRounds.foreach { ttl =>
-            val upTo = math.min((round + 1) - ttl, epochStart - 1)
-            if (upTo > 0) store.expire(upTo)
-          }
-
-          fresh.unpersist(); selected.unpersist(); newGate.unpersist()
-          if (epochGate != null) epochGate.unpersist()
-          round += 1
-          // all batches consumed and nothing carried → finished
-          if (carryCount == 0 && round - epochStart > maxBatch) done = true
-        }
+        // The hit count is identically 0 (fresh IS the pruned batch).
+        val n = cfg.globalBudget.fold(batchRows)(g => math.min(g, batchRows))
+        val lineage =
+          if (n == 0) Future.successful(Map.empty[String, Long])
+          else Future(lineageAndCount(selected)._2)
+        Schedule(fresh, selected, batchRows, n, candidates, 0L, epochFresh = true, lineage)
+      } else {
+        val fresh = st.seen.notSeen(
+          mergeFrontier(batch.select(frontierCols.map(col): _*).unionByName(st.carry.df))).cache()
+        val selected = Scheduler.rankSelect(fresh, limits, cfg, budgetRobots).cache()
+        // the ranked count requires the job anyway, so it stays synchronous
+        val (n, lineage) = lineageAndCount(selected)
+        // fresh is already materialized by the schedule actions, so this
+        // count reads cached blocks
+        Schedule(fresh, selected, batchRows, n, candidates,
+          math.max(0L, candidates - fresh.count()), epochFresh = false,
+          Future.successful(lineage))
       }
     }
-    round - 1
+
+    // one action gives the scheduled count AND the trace's per-host
+    // lineage (the manifest requirement): when the round touches
+    // ≤10k hosts (the common case — politeness bounds hosts/round)
+    // the groupBy result IS the complete lineage; only a >10k-host
+    // round pays a second pass for the bounded top-N + rollup
+    private def lineageAndCount(selected: DataFrame): (Long, Map[String, Long]) = {
+      val maxLineageParts = 10000
+      val hostRows = selected.groupBy("host").count()
+        .limit(maxLineageParts + 1).collect()
+        .map(r => (r.getString(0), r.getLong(1)))
+      if (hostRows.length <= maxLineageParts)
+        (hostRows.map(_._2).sum, hostRows.toMap)
+      else {
+        val hc = selected.groupBy("host").count().cache()
+        val n = hc.agg(coalesce(sum("count"), lit(0L))).head().getLong(0)
+        val top = hc.orderBy(desc("count"), asc("host")).limit(maxLineageParts)
+          .collect().map(r => (r.getString(0), r.getLong(1)))
+        hc.unpersist()
+        val m = top.toMap
+        val counted = top.map(_._2).sum
+        (n, if (n > counted) m + ("<other>" -> (n - counted)) else m)
+      }
+    }
+
+    private def fetchExtract(r: Int, sched: Schedule, phase: PhaseTimer): Fetched = {
+      // "fetch" = equi join against the pages table (J4). The batch is
+      // politeness-budget-bounded, so broadcast IT into the pages scan:
+      // pages stream through a hash probe with no shuffle/sort of the
+      // (html-payload-heavy) big side. An SMJ here re-sorts the whole
+      // pages table every round. The bucketed pages table takes no
+      // broadcast hint — its bucket-aligned scan has no Exchange either
+      // way, and letting the planner shuffle only the batch side into
+      // bucket alignment is the 10^10 shape (AQE picks per batch size);
+      // AQE skew-join covers a batch beyond broadcast size.
+      def joinPages(batch: DataFrame)(on: (DataFrame, DataFrame) => DataFrame): DataFrame =
+        on(pages,
+          if (cfg.bucketedPagesTable.isEmpty && sched.scheduled <= 2000000L) broadcast(batch)
+          else batch)
+      val batch = sched.selected.select("url", "url_hash", "host", "depth", "rank")
+      val fetched = aliasMap match {
+        case None => joinPages(batch)(_.join(_, Seq("url"), "inner"))
+        case Some(am) =>
+          // alias resolution folds into the batch side of the SAME
+          // fetch plan: rows whose chain failed (redir set,
+          // redirect_final null) are unfetchable and land in
+          // `missing`; the rest fetch the destination's payload and
+          // attribute it to the REQUESTED url (scraper.py:158-169 —
+          // cache key, conversion base, chunk source_url all use the
+          // requested url).
+          val resolved = batch.join(broadcast(am), Seq("url"), "left")
+            .filter(col("redir").isNull || col("redirect_final").isNotNull)
+            .select(col("url").as("req_url"), col("url_hash"), col("host"),
+              col("depth"), col("rank"),
+              coalesce(col("redirect_final"), col("url")).as("fetch_url"))
+          joinPages(resolved)((p, b) => p.join(b, p("url") === b("fetch_url"), "inner"))
+            .drop("url").withColumnRenamed("req_url", "url")
+      }
+      // redirect accounting rides the extract write (url != fetch_url
+      // ⇔ the row arrived via an alias) — no extra job
+      val redirObs = Observation(s"redir_r$r")
+      val fetchedAliased =
+        if (aliasMap.isDefined)
+          fetched.observe(redirObs, coalesce(sum(when(
+            col("url") =!= col("fetch_url"), 1L)), lit(0L)).as("redirects_followed"))
+        else fetched
+      // transient-fault replay (FetchRetry): attempt classification +
+      // exhausted-row removal fold into the same fetch plan; the
+      // extract input's failure/retry counts ride the extract write's
+      // Observation (CollectMetrics sits BELOW the fetch_ok filter, so
+      // it sees every scheduled-and-present row) — no extra job
+      def arrived(df: DataFrame)(observe: DataFrame => DataFrame): DataFrame =
+        faultMap.fold(df)(fm => observe(
+            graft.frontier.FetchRetry.withAttempts(df, fm, cfg.fetchMaxRetries))
+          .filter(col("fetch_ok")).drop("fetch_ok", "fetch_attempts"))
+      val faultObs = Observation(s"fault_r$r")
+      val forExtract = arrived(fetchedAliased)(_.observe(faultObs,
+        coalesce(sum(when(!col("fetch_ok"), 1L)), lit(0L)).as("fetch_failed"),
+        coalesce(sum(when(col("fetch_ok"), col("fetch_attempts").cast("long") - 1L)), lit(0L))
+          .as("retry_attempts")))
+      // one typed parse pass written STRAIGHT to the snapshot's results
+      // table (markdown + outlinks + chunk structs inline) — parquet IS
+      // the round's materialization; persist()/cache() of this wide DF
+      // costs more than the parquet write (in-memory columnar builders
+      // on big string columns) and a second consumer would re-parse.
+      // All derived tables read back columnar + pruned. Accounting (row
+      // count + chunk sum) rides the WRITE job as an Observation — zero
+      // extra jobs, zero re-scan of the output.
+      val resultsPath = s"${store.root}/data/v$r/results"
+      val exObs = Observation(s"extract_r$r")
+      extract(spark, forExtract, cfg).toDF()
+        .withColumn("round", lit(r))
+        // content fingerprint, stored AT extract so the adaptive-
+        // recrawl history pass reads (url, round, fp) columnar and
+        // never re-touches the markdown payload
+        .withColumn("fp", xxhash64(col("markdown")))
+        .observe(exObs, count(lit(1)).as("n_rows"),
+          coalesce(sum(col("n_chunks").cast("long")), lit(0L)).as("n_chunks"))
+        .write.mode("overwrite").parquet(resultsPath)
+      val exM = exObs.get
+      phase("fetch+extract")
+
+      // opt-in raw-capture archive (Config.archiveWarc): the round's
+      // successful payloads leave as member-per-record gzip WARC + a
+      // recordAt-addressable index under the snapshot dir. Rebuilt from
+      // `fetched` WITHOUT the metric Observations (a second action on
+      // the observed plan would double-fire them), keeping only the
+      // payloads that actually arrived. Capture attribution matches
+      // extract: requested url, the matched page row's warc_ts.
+      val warc =
+        if (!cfg.archiveWarc) Map.empty[String, Double]
+        else {
+          val idx = graft.sources.WarcWriter.writeWarcFiles(
+            arrived(fetched)(identity)
+              .select(col("url"), col("warc_ts"), lit(200L).as("status"), col("html")),
+            s"${store.root}/data/v$r/warc", gzip = true)
+          idx.write.mode("overwrite").parquet(s"${store.root}/data/v$r/warc_index")
+          val n = idx.count() // local: idx is checkpointed
+          phase("warc-archive")
+          Map("warc_captures" -> n.toDouble)
+        }
+      // the observed aggregates are named by their manifest metric
+      def metrics(o: Observation, observed: Boolean): Map[String, Double] =
+        if (!observed) Map.empty
+        else o.get.map { case (k, v) => k -> v.asInstanceOf[Long].toDouble }
+      Fetched(resultsPath, exM("n_rows").asInstanceOf[Long], exM("n_chunks").asInstanceOf[Long],
+        metrics(redirObs, aliasMap.isDefined) ++ metrics(faultObs, faultMap.isDefined) ++ warc)
+    }
+
+    /** Frontier growth: outlinks → canonical keys → depth+1 (G6),
+      * seen-filtered, then robots-gated AT INSERT (F7). Returns the
+      * gate's (allowed, denied, cache). */
+    private def links(st: RoundState, sched: Schedule,
+                      resultsPath: String): (DataFrame, DataFrame, DataFrame) = {
+      val newLinks0 = spark.read.parquet(resultsPath)
+        .select(explode(col("outlinks")).as("raw_url"), (col("depth") + 1).as("depth"))
+        .filter(col("depth") <= cfg.maxDepth)
+      val newLinks = Frontier.withFrontierKeys(newLinks0, "raw_url")
+        .groupBy("url", "url_hash", "host")
+        .agg(min("depth").as("depth"))
+        .withColumn("priority", lit(null).cast("double"))
+        .select(frontierCols.map(col): _*)
+      // second anti-join excludes THIS round's selections (not yet in
+      // the committed seen set / Bloom). The right side is just the
+      // round's url_hash column (≤ budget × 8 bytes) — broadcast it
+      // so the 10M-row outlink set is not shuffled for it.
+      val newFresh = st.seen.notSeen(newLinks)
+        .join(broadcast(sched.selected.select("url_hash")), Seq("url_hash"), "left_anti")
+      Scheduler.robotsGate(newFresh, robotsDf)
+    }
+
+    /** The round's bookkeeping writes. `visited` and carry/next-epoch are
+      * independent, so they run CONCURRENTLY: one write's task waves
+      * fill the other's scheduling gaps (a wall-clock win exactly when
+      * idle task slots exist, i.e. at higher core counts; a 1-core run
+      * serializes them anyway). The seen add is chained onto the visited
+      * write and overlaps the epoch-next write and the commit; it returns
+      * the next round's seen set and touches nothing the main thread
+      * reads. */
+    private def bookkeeping(st: RoundState, epoch: Epoch, sched: Schedule, newAllowed: DataFrame,
+                            denied: DataFrame, phase: PhaseTimer): Written = {
+      val r = st.round
+      // ONE `visited` table = scheduled rows (rank set) ∪ denied rows
+      // (rank null); seen_delta and trace are merge-on-read views of
+      // it — one write job per round instead of three. The denied count
+      // rides the visited WRITE as an Observation (rank is null ⇔
+      // denied) instead of its own count() job.
+      val visitObs = Observation(s"visited_r$r")
+      val visited = sched.selected
+        .select(lit(r).as("round"), col("host"), col("rank").cast("int").as("rank"),
+          col("url"), col("url_hash"))
+        .unionByName(denied.select(lit(r).as("round"), col("host"),
+          lit(null).cast("int").as("rank"), col("url"), col("url_hash")))
+        .observe(visitObs,
+          coalesce(sum(when(col("rank").isNull, 1L).otherwise(0L)), lit(0L)).as("n_denied"))
+      def nDenied = visitObs.get("n_denied").asInstanceOf[Long]
+
+      // carry′ = unselected candidates ∪ new allowed links — size is
+      // ∝ the round's delta + displaced rows, NOT the total frontier.
+      // Fast path without a W4 cap: every batch row was selected, so
+      // the unselected side is empty and newAllowed is ALREADY
+      // unique per url (the newLinks groupBy) — the merge groupBy
+      // would be one more O(delta) shuffle for nothing.
+      val carryNext =
+        if (sched.epochFresh && cfg.globalBudget.isEmpty)
+          newAllowed.select(frontierCols.map(col): _*)
+        else mergeFrontier(
+          sched.fresh.join(broadcast(sched.selected.select("url_hash")), Seq("url_hash"), "left_anti")
+            .unionByName(newAllowed))
+
+      val visitedPath = s"${store.root}/data/v$r/visited"
+      val visitedF = Future(visited.write.mode("overwrite").parquet(visitedPath))
+      val seenF = visitedF.map(_ =>
+        st.seen.add(SeenSet.Delta(r, visitedPath, sched.scheduled + nDenied)))
+
+      // Epoch fast-path: this round consumed the LAST assigned batch,
+      // so next round would re-epoch from (∅ remaining ∪ carry).
+      // Assign the next epoch NOW and commit it directly — the
+      // carry-table write + read-back + re-write as `assigned` was a
+      // full extra round-trip of the frontier delta every round in a
+      // budget-unbound crawl. (Budget-BOUND crawls keep the carry
+      // path: their epoch amortizes over many rounds.) …but not when
+      // the NEXT round re-scores priorities or re-freezes the due set:
+      // a pre-assignment under the stale ranking key would be thrown
+      // away at the boundary.
+      val nextIsRescore = (cfg.linkPriorityMode.isDefined &&
+        (r + 1) % cfg.linkPriorityEvery == 0) ||
+        (adaptive && (r + 1) % cfg.recrawlEvery == 0)
+      val next =
+        if (r - epoch.start >= epoch.maxBatch && !nextIsRescore) {
+          val e = assign(carryNext, s"${store.root}/data/v$r/assigned_next", r + 1,
+            s"assign_next_r$r")
+          phase("epoch-next")
+          Right(e)
+        } else {
+          val carryPath = s"${store.root}/data/v$r/carry"
+          carryNext.write.mode("overwrite").parquet(carryPath)
+          Left(carryPath)
+        }
+      Await.result(visitedF, Duration.Inf)
+      Written(visitedPath, nDenied, next, seenF)
+    }
+
+    /** Commit the round's snapshot; returns the next round's state with
+      * the seen set still to be replaced by the pending add. */
+    private def commit(st: RoundState, epoch: Epoch, sched: Schedule, fetched: Fetched,
+                       written: Written, t0: Long): RoundState = {
+      val r = st.round
+      val visited = sched.scheduled + written.denied
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      val preAssigned = written.next.isRight
+      val committed = written.next.getOrElse(epoch.copy(consumed = epoch.consumed + sched.batchRows))
+      store.commit(spark, r,
+        Map.empty,
+        Map(
+          "scheduled" -> sched.scheduled.toDouble,
+          "fetched" -> fetched.rows.toDouble,
+          "missing" -> (sched.scheduled - fetched.rows).toDouble,
+          "robots_denied" -> written.denied.toDouble,
+          "cache_candidates" -> sched.candidates.toDouble,
+          "cache_hits" -> sched.cacheHits.toDouble,
+          "chunks" -> fetched.chunks.toDouble,
+          "elapsed_sec" -> elapsed,
+          "epoch_start" -> committed.start.toDouble,
+          "assigned_total" -> committed.total.toDouble,
+          "assigned_consumed" -> committed.consumed.toDouble,
+          "assigned_max_batch" -> committed.maxBatch.toDouble) ++
+          fetched.metrics ++ st.seen.metrics,
+        partitionKeyCol = Some("host"),
+        knownCounts = Map(
+          "visited" -> visited,
+          "seen_delta" -> visited,
+          "results" -> fetched.rows,
+          "chunks" -> fetched.chunks,
+          "trace" -> sched.scheduled,
+          "assigned" -> committed.total) ++
+          (if (preAssigned) Map("carry" -> 0L) else Map.empty),
+        preWritten = Map("results" -> fetched.resultsPath,
+          "visited" -> written.visitedPath,
+          "assigned" -> committed.path) ++
+          written.next.fold(carry => Map("carry" -> carry), _ => Map.empty[String, String]),
+        knownLineage = Map("trace" -> Await.result(sched.lineage, Duration.Inf)),
+        // chunks = merge-on-read view over results: the chunk rows
+        // are already materialized (nested) in the results parquet —
+        // a second flat write would double the round's largest write
+        viewTables = Map(
+          "chunks" -> (fetched.resultsPath, "explode_chunks"),
+          "seen_delta" -> (written.visitedPath, "seen_from_visited"),
+          "trace" -> (written.visitedPath, "trace_from_visited")) ++
+          (if (preAssigned) Map("carry" -> (written.visitedPath, "empty_frontier"))
+           else Map.empty))
+      val carry =
+        if (preAssigned) emptyCarry
+        else Carry(store.readTable(spark, r, "carry"), store.manifest(r).tables("carry").rows)
+      RoundState(r + 1, Some(committed), carry, st.seen)
+    }
+  }
+
+  /** Run (or resume) the crawl. Returns the final snapshot version. */
+  def run(spark: SparkSession, siteDir: String, workDir: String,
+          cfg: Scheduler.Config = Scheduler.Config(),
+          maxRounds: Int = 50,
+          bloomThreshold: Long = 100000L): Int = {
+    require(cfg.linkPriorityMode.forall(Set("indegree", "pagerank", "hostrank", "urlshape")),
+      s"linkPriorityMode must be indegree|pagerank|hostrank|urlshape, got ${cfg.linkPriorityMode}")
+    require(Set("bloom", "cuckoo")(cfg.seenSketch),
+      s"seenSketch must be bloom|cuckoo, got ${cfg.seenSketch}")
+    require(cfg.linkPriorityEvery > 0,
+      s"linkPriorityEvery must be positive, got ${cfg.linkPriorityEvery}")
+    require(cfg.recrawlMinRounds.isDefined == cfg.recrawlMaxRounds.isDefined,
+      "recrawlMinRounds and recrawlMaxRounds must be set together")
+    if (cfg.recrawlMinRounds.isDefined) {
+      require(cfg.recrawlMinRounds.get >= 0 &&
+        cfg.recrawlMaxRounds.get >= cfg.recrawlMinRounds.get,
+        s"need 0 <= recrawlMinRounds <= recrawlMaxRounds, got " +
+          s"(${cfg.recrawlMinRounds}, ${cfg.recrawlMaxRounds})")
+      require(cfg.recrawlEvery > 0,
+        s"recrawlEvery must be positive, got ${cfg.recrawlEvery}")
+      require(cfg.seenTtlRounds.isEmpty,
+        "adaptive recrawl replaces the fixed seen TTL — unset seenTtlRounds")
+    }
+    val crawl = new Crawl(spark, siteDir, workDir, cfg, bloomThreshold)
+    @tailrec def loop(st: RoundState): Int =
+      if (st.round >= maxRounds) st.round - 1
+      else crawl.round(st) match {
+        case Some(next) if !next.finished => loop(next)
+        case Some(next) => next.round - 1
+        case None => st.round - 1
+      }
+    loop(crawl.resume())
   }
 
   final case class CacheStats(requests: Long, hits: Long, hitRate: Double,

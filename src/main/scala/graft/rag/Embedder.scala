@@ -1,5 +1,7 @@
 package graft.rag
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -26,7 +28,7 @@ final case class HashBatchEncoder(dim: Int) extends BatchEncoder {
   override def encodeBatch(texts: Array[String]): Array[Array[Float]] =
     texts.map { t =>
       val vec = new Array[Float](dim)
-      graft.chunk.Chunker.pySplit(if (t == null) "" else t.toLowerCase).foreach { tok =>
+      graft.chunk.Chunker.pySplit(if (t == null) "" else t.toLowerCase(Locale.ROOT)).foreach { tok =>
         val h = graft.functions.Sketch.hashString(
           org.apache.spark.unsafe.types.UTF8String.fromString(tok), 42L)
         val b = ((h % dim) + dim) % dim

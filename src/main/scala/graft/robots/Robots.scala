@@ -1,5 +1,7 @@
 package graft.robots
 
+import java.util.Locale
+
 import graft.model.RobotsRules
 
 /** robots.txt parsing + allow checking.
@@ -20,7 +22,7 @@ object Robots {
   def sitemapsInRobots(body: String): Seq[String] = {
     if (body == null) return Nil
     body.linesIterator.collect {
-      case line if line.toLowerCase.startsWith("sitemap:") => line.substring(8).trim
+      case line if line.toLowerCase(Locale.ROOT).startsWith("sitemap:") => line.substring(8).trim
     }.filter(_.nonEmpty).toSeq
   }
 
@@ -31,7 +33,7 @@ object Robots {
     val allow = Seq.newBuilder[String]
     val disallow = Seq.newBuilder[String]
     var crawlDelay: Option[Double] = None
-    val agentLower = agent.toLowerCase
+    val agentLower = agent.toLowerCase(Locale.ROOT)
     var inMatchingGroup = false
     var groupHasRules = false
     if (body != null) body.linesIterator.foreach { raw =>
@@ -39,12 +41,12 @@ object Robots {
       if (line.nonEmpty) {
         val colon = line.indexOf(':')
         if (colon > 0) {
-          val key = line.substring(0, colon).trim.toLowerCase
+          val key = line.substring(0, colon).trim.toLowerCase(Locale.ROOT)
           val value = line.substring(colon + 1).trim
           key match {
             case "user-agent" =>
               if (groupHasRules) { inMatchingGroup = false; groupHasRules = false }
-              val v = value.toLowerCase
+              val v = value.toLowerCase(Locale.ROOT)
               if (v == "*" || v == agentLower || agentLower.startsWith(v)) inMatchingGroup = true
             case "allow" if inMatchingGroup =>
               groupHasRules = true

@@ -1,5 +1,7 @@
 package graft.search
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -56,7 +58,7 @@ object Bm25 {
   /** Normalize a query like the token stream: lowercase, trim, drop
     * blanks, dedup, ascending order (the left-fold order of [[score]]). */
   def normalizeQuery(query: Seq[String]): Seq[String] =
-    query.map(_.trim.toLowerCase).filter(_.nonEmpty).distinct.sorted
+    query.map(_.trim.toLowerCase(Locale.ROOT)).filter(_.nonEmpty).distinct.sorted
 
   /** One-pass corpus statistics for `query`'s terms. */
   def stats(docs: DataFrame, idCol: String, textCol: String,

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.ByteBuffer
 import java.nio.charset.{Charset => JCharset, CodingErrorAction, IllegalCharsetNameException, UnsupportedCharsetException}
+import java.util.Locale
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
@@ -50,7 +51,7 @@ object Charset {
     val n = math.min(bytes.length, scanBytes)
     // ISO-8859-1 view: every byte maps to a char, so ASCII-compatible
     // declarations are findable regardless of the actual encoding
-    val prefix = new String(bytes, 0, n, JCharset.forName("ISO-8859-1")).toLowerCase
+    val prefix = new String(bytes, 0, n, JCharset.forName("ISO-8859-1")).toLowerCase(Locale.ROOT)
     val m = MetaCharset.matcher(prefix)
     while (m.find()) {
       val name = m.group(1)

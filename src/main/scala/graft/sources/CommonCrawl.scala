@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -32,16 +34,16 @@ object CommonCrawl {
     val p = UrlCanonical.parse(url)
     if (p == null || p.host.isEmpty) return null
     val host = {
-      val h = p.host.toLowerCase
+      val h = p.host.toLowerCase(Locale.ROOT)
       if (h.startsWith("www.") && h.length > 4) h.substring(4) else h
     }
     val isIp = host.nonEmpty && host.forall(c => (c >= '0' && c <= '9') || c == '.')
     val key = if (isIp) host else host.split('.').reverse.mkString(",")
     val port = if (p.port >= 0) ":" + p.port else ""
-    val path = (if (p.path.isEmpty) "/" else p.path).toLowerCase
+    val path = (if (p.path.isEmpty) "/" else p.path).toLowerCase(Locale.ROOT)
     val query = p.query match {
       case null => ""
-      case q => "?" + q.toLowerCase.split('&').sorted.mkString("&")
+      case q => "?" + q.toLowerCase(Locale.ROOT).split('&').sorted.mkString("&")
     }
     key + port + ")" + path + query
   }

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.time.Instant
 import java.time.format.DateTimeParseException
+import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -85,7 +86,7 @@ object Warc {
           val colon = line.indexOf(':')
           if (colon <= 0)
             return (out.result(), Some(s"malformed header line '${line.take(40)}'"))
-          headers += (line.substring(0, colon).trim.toLowerCase ->
+          headers += (line.substring(0, colon).trim.toLowerCase(Locale.ROOT) ->
             line.substring(colon + 1).trim)
           i = lineEnd + 2
         }
@@ -131,7 +132,7 @@ object Warc {
       } else 0L
     val hdrs = lines.tail.flatMap { l =>
       val c = l.indexOf(':')
-      if (c > 0) Some(l.substring(0, c).trim.toLowerCase -> l.substring(c + 1).trim) else None
+      if (c > 0) Some(l.substring(0, c).trim.toLowerCase(Locale.ROOT) -> l.substring(c + 1).trim) else None
     }.toMap
     (status, hdrs, java.util.Arrays.copyOfRange(payload, split + 4, payload.length))
   }

@@ -1,5 +1,7 @@
 package graft.text
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -59,7 +61,7 @@ object PipelineOps {
           val tail = path.split("/", -1).last.replace("-", " ").replace("_", " ")
           // Python str.title(): capitalize letter runs
           tail.split(" ", -1).map { w =>
-            if (w.isEmpty) w else w.substring(0, 1).toUpperCase + w.substring(1).toLowerCase
+            if (w.isEmpty) w else w.substring(0, 1).toUpperCase(Locale.ROOT) + w.substring(1).toLowerCase(Locale.ROOT)
           }.mkString(" ")
         } else UrlCanonical.netloc(url)
     }
@@ -113,7 +115,7 @@ object PipelineOps {
     * like HTML, ≤20 script tags. */
   def validateHtmlContent(content: String): Boolean = {
     if (content == null || content.isEmpty) return false
-    val lower = content.toLowerCase
+    val lower = content.toLowerCase(Locale.ROOT)
     if (!lower.contains("<html") && !lower.contains("<body")) return false
     var count = 0
     var idx = lower.indexOf("<script")
@@ -127,7 +129,7 @@ object PipelineOps {
     * length_factor = min(1, 200/max(words,1)). Column-expression form
     * for a literal query string. */
   def rerank(results: DataFrame, scoreCol: String, contentCol: String, query: String, limit: Int): DataFrame = {
-    val queryTerms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
+    val queryTerms = query.toLowerCase(Locale.ROOT).split("\\s+").filter(_.nonEmpty).distinct
     val content = col(contentCol)
     val contentTerms = array_distinct(split(lower(trim(content)), "\\s+"))
     val overlap =
@@ -187,7 +189,7 @@ object PipelineOps {
               substring(col(textCol), 1, maxVocabChars)).otherwise(col(textCol)))
           .orderBy(col(idCol)).limit(nFit).as[(Long, String)].collect()
         texts.iterator.takeWhile(_ => m.size < maxFeatures).foreach { case (_, t) =>
-          t.toLowerCase.split("\\s+").filter(_.nonEmpty).foreach { tok =>
+          t.toLowerCase(Locale.ROOT).split("\\s+").filter(_.nonEmpty).foreach { tok =>
             if (!m.contains(tok) && m.size < maxFeatures) m(tok) = m.size
           }
         }
@@ -207,7 +209,7 @@ object PipelineOps {
     val embed = udf((t: String) => {
       val v = bc.value
       val vec = new Array[Double](v.size)
-      t.toLowerCase.split("\\s+").filter(_.nonEmpty).foreach { tok =>
+      t.toLowerCase(Locale.ROOT).split("\\s+").filter(_.nonEmpty).foreach { tok =>
         v.get(tok).foreach(i => vec(i) += 1.0)
       }
       val norm = math.sqrt(vec.map(x => x * x).sum)

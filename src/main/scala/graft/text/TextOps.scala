@@ -1,5 +1,7 @@
 package graft.text
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -152,7 +154,7 @@ object TextOps {
   val normalizeForDedupUdf = udf { (s: String) =>
     if (s == null) null
     else {
-      val lower = s.toLowerCase
+      val lower = s.toLowerCase(Locale.ROOT)
       val stripped = NormMarks.matcher(
         java.text.Normalizer.normalize(lower, java.text.Normalizer.Form.NFD)).replaceAll("")
       NormWs.matcher(

@@ -17,15 +17,26 @@ import graft.jobs.CrawlJob
   *       optimization did not change what a query computes
   *   runMain graft.tools.ProbeTool explainexec <outDir> <name>[,<name>...]
   *     — EXECUTE the query (collect), then write the final
-  *       ADAPTIVE plan (`isFinalPlan=true`) — AQE join re-selection
-  *       (e.g. SMJ → shuffled-hash under runtime sizes) only appears
-  *       here, never in the pre-execution `explain` output
+  *       ADAPTIVE plan (`isFinalPlan=true`) to <outDir>/<name>.exec.txt —
+  *       AQE join re-selection (e.g. SMJ → shuffled-hash under runtime
+  *       sizes) only appears here, never in the pre-execution `explain`
+  *       output, and the separate file keeps both plans side by side
   *
   * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench. */
 object ProbeTool {
+  private val usage = "usage: ProbeTool explain|explainexec|snapshot <outDir> <names-csv>|all"
+
+  private def writePlan(df: org.apache.spark.sql.DataFrame, file: File): Unit = {
+    val w = new PrintWriter(file)
+    try w.write(df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode))
+    finally w.close()
+  }
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: ProbeTool explain|snapshot <outDir> <names-csv>|all")
+    require(args.length >= 3, usage)
     val mode = args(0)
+    require(Set("explain", "explainexec", "snapshot")(mode), s"unknown mode $mode; $usage")
     val outDir = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -42,26 +53,18 @@ object ProbeTool {
     qs.foreach { case (name, fn) =>
       val df = fn(spark, sfDir)
       mode match {
-        case "explain" =>
-          val w = new PrintWriter(new File(outDir, s"$name.txt"))
-          try w.write(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-          finally w.close()
+        case "explain" => writePlan(df, new File(outDir, s"$name.txt"))
         case "explainexec" =>
           // collect() executes THIS df's QueryExecution (count()/noop-write
           // would build a separate one and leave this plan un-finalized)
           df.collect()
-          val w = new PrintWriter(new File(outDir, s"$name.txt"))
-          try w.write(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-          finally w.close()
+          writePlan(df, new File(outDir, s"$name.exec.txt"))
         case "snapshot" =>
           val rows = df.collect().map(_.toString).sorted
           val w = new PrintWriter(new File(outDir, s"$name.rows"))
           try { w.write(s"schema: ${df.schema.treeString}\n"); rows.foreach(r => w.println(r)) }
           finally w.close()
           println(s"[probetool] $name: ${rows.length} rows")
-        case other => sys.error(s"unknown mode $other")
       }
     }
     spark.stop()

@@ -1,5 +1,7 @@
 package graft.url
 
+import java.util.Locale
+
 /** URL validation / sanitization / resolution with the semantics the
   * reference engine exhibits.
   *
@@ -48,7 +50,7 @@ object UrlCanonical {
     if (!((c0 >= 'a' && c0 <= 'z') || (c0 >= 'A' && c0 <= 'Z'))) return null
     var i = 1
     while (i < url.length && isSchemeChar(url.charAt(i))) i += 1
-    if (i < url.length && url.charAt(i) == ':') url.substring(0, i).toLowerCase
+    if (i < url.length && url.charAt(i) == ':') url.substring(0, i).toLowerCase(Locale.ROOT)
     else null
   }
 
@@ -75,10 +77,10 @@ object UrlCanonical {
       val hostPort = if (atIdx >= 0) { userinfo = auth.substring(0, atIdx); auth.substring(atIdx + 1) } else auth
       val colonIdx = hostPort.lastIndexOf(':')
       if (colonIdx >= 0 && hostPort.indexOf(']') < colonIdx) {
-        host = hostPort.substring(0, colonIdx).toLowerCase
+        host = hostPort.substring(0, colonIdx).toLowerCase(Locale.ROOT)
         val p = hostPort.substring(colonIdx + 1)
         port = if (p.isEmpty) -1 else try p.toInt catch { case _: NumberFormatException => return null }
-      } else host = hostPort.toLowerCase
+      } else host = hostPort.toLowerCase(Locale.ROOT)
       if (SpecialSchemes.get(scheme).contains(port)) port = -1
     } else {
       path = rest // opaque or path-only
@@ -267,6 +269,6 @@ object UrlCanonical {
     val at = n.lastIndexOf('@')
     val hp = if (at >= 0) n.substring(at + 1) else n
     val colon = hp.lastIndexOf(':')
-    (if (colon >= 0 && hp.indexOf(']') < colon) hp.substring(0, colon) else hp).toLowerCase
+    (if (colon >= 0 && hp.indexOf(']') < colon) hp.substring(0, colon) else hp).toLowerCase(Locale.ROOT)
   }
 }
